@@ -1,11 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship gridmet pipeline on sf0.001-adjacent
-fixtures; ``queries()`` exposes every implemented SURVEY.md §2 operator as a
-(spark, sf_dir) callable; ``oracle_sql()`` gives the DuckDB-equivalent SQL
-(tables region/nation/customer/supplier/part/orders/lineitem/events/
-documents/embeddings are pre-registered views; domain fixtures are read by
-absolute parquet path).
+``entry(spark)`` runs the flagship gridmet pipeline on the seed-42
+fixtures; ``queries()`` exposes the 17 paper operators of SURVEY.md §2 as
+(spark, sf_dir) callables; ``oracle_sql()`` gives the DuckDB-equivalent SQL
+for each. Every query reads the domain fixtures under ``fixtures/`` by
+absolute parquet path, so the oracle SQL needs no pre-registered tables.
 """
 
 from __future__ import annotations
@@ -19,235 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gridmet_etl_spark.contract import DOMAIN_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext import EXT_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext2 import EXT2_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext3 import EXT3_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext4 import EXT4_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext5 import EXT5_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext6 import EXT6_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext7 import EXT7_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext8 import EXT8_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext9 import EXT9_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext10 import EXT10_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext11 import EXT11_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext12 import EXT12_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext13 import EXT13_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext14 import EXT14_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext15 import EXT15_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext16 import EXT16_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext17 import EXT17_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext18 import EXT18_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext19 import EXT19_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext20 import EXT20_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext21 import EXT21_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext22 import EXT22_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext23 import EXT23_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext24 import EXT24_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext25 import EXT25_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext26 import EXT26_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext27 import EXT27_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext28 import EXT28_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext29 import EXT29_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext30 import EXT30_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext31 import EXT31_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext32 import EXT32_QUERIES  # noqa: E402
-from gridmet_etl_spark.contract_ext33 import EXT33_QUERIES  # noqa: E402
-
-_MERGED = {
-    **DOMAIN_QUERIES,
-    **EXT_QUERIES,
-    **EXT2_QUERIES,
-    **EXT3_QUERIES,
-    **EXT4_QUERIES,
-    **EXT5_QUERIES,
-    **EXT6_QUERIES,
-    **EXT7_QUERIES,
-    **EXT8_QUERIES,
-    **EXT9_QUERIES,
-    **EXT10_QUERIES,
-    **EXT11_QUERIES,
-    **EXT12_QUERIES,
-    **EXT13_QUERIES,
-    **EXT14_QUERIES,
-    **EXT15_QUERIES,
-    **EXT16_QUERIES,
-    **EXT17_QUERIES,
-    **EXT18_QUERIES,
-    **EXT19_QUERIES,
-    **EXT20_QUERIES,
-    **EXT21_QUERIES,
-    **EXT22_QUERIES,
-    **EXT23_QUERIES,
-    **EXT24_QUERIES,
-    **EXT25_QUERIES,
-    **EXT26_QUERIES,
-    **EXT27_QUERIES,
-    **EXT28_QUERIES,
-    **EXT29_QUERIES,
-    **EXT30_QUERIES,
-    **EXT31_QUERIES,
-    **EXT32_QUERIES,
-    **EXT33_QUERIES,
-}
-
-# The driver caps its per-round oracle comparison at the first 50 queries
-# in registration order, so ORDER decides coverage. Round-11 window policy
-# (VERDICT r10 "Next round" item 1 — continue the recertification rotation,
-# registry frozen at 407, zero new queries): the window is exactly what
-# tools/rotation_plan.py emits (now counting only GREEN driver rows as
-# certifying, per ADVICE r11 item 1):
-#   (1) bm25_topk leads — it heads the oldest-certified (round-2) cohort;
-#   (2) the remaining 42 round-2-certified names, alphabetical;
-#   (3) the 7 alphabetically-first round-3-certified names
-#       (bilinear_interp, calibration_eval, char_entropy, climate_pipeline,
-#       coarsen_grid, cross_correlation, cusum_changepoints) to fill 50.
-# 1 + 42 + 7 = 50. After this round the oldest driver certification moves
-# from r2 to r3; the rotation continues in r12 with the remaining 42 r3
-# names. The whole cohort is pre-validated 3-shape-stable
-# (docs/SWEEP_SF01.md) and re-swept locally at sf0.01 and sf0.1
-# (tools/check_oracle.py --strict). Everything below the cap holds a green
-# driver row from r3-r10.
-_CHECK_FIRST = [
-    "bm25_topk", "c4_filters", "chunk_windows",
-    "classifier_score", "clean_text", "climatology_anomaly",
-    "cms_counts", "corpus_pipeline", "cosine_topk_np",
-    "curriculum_order", "decontam_bloom", "decontam_exact",
-    "decontam_fuzzy", "dedup_clusters", "domain_flags",
-    "embedding_near_dups", "gap_fill", "gopher_filters",
-    "inverted_index", "jsonl_scan", "lm_score",
-    "masked_weighted_mean", "media_stats", "minhash_lsh",
-    "mixture_sample", "pack_sequences", "pagerank",
-    "pmi_bigrams", "profile_lineitem", "repetition_stats",
-    "resample_weekly", "rp_project", "semantic_dedup",
-    "shard_pack", "simhash_near_dups", "span_dedup",
-    "split_assign", "stratified_sample", "tfidf_topk",
-    "upsert_orders", "winnow_fingerprints", "winsorize_grid",
-    "zscore_grid", "bilinear_interp", "calibration_eval",
-    "char_entropy", "climate_pipeline", "coarsen_grid",
-    "cross_correlation", "cusum_changepoints", "qte_quartiles",
-    "apriori_triples", "rmst_survival", "gk_lambda_assoc",
-    "somers_d_eval", "attribution_join", "bbox_filter",
-    "bigram_topk", "catalog_lookup", "cfsv2_ensemble_pipeline",
-    "cfsv2_median_pipeline", "ensemble_median", "ensemble_quantiles",
-    "ensemble_stats", "events_daily", "events_moving_avg",
-    "events_props_json", "events_window", "exact_dedup",
-    "fill_pipeline", "nearest_donor", "ngram_jaccard",
-    "physics_rh", "pivot_wide", "qa_checks",
-    "range_join", "salted_agg", "text_analysis",
-    "time_filter", "tpch_above_avg", "tpch_cube",
-    "tpch_join3", "tpch_outer_agg", "tpch_q13ish",
-    "tpch_q16ish", "tpch_q18ish", "tpch_q19ish",
-    "tpch_q5ish", "tpch_q7ish", "tpch_rollup",
-    "tpch_semi_anti", "tpch_topn", "tpch_weighted_mean",
-    "tpch_window_topk", "union_concat", "unpivot_long",
-    "weight_sum_qa", "approx_aggs", "asof_join",
-    "sign_test", "tpch_q1", "class_balance",
-    "tpcds_multiband", "weighted_ess", "max_drawdown",
-    "sessionize_batch", "tpch_q9ish", "weighted_sample",
-    "mood_median", "turning_points", "durbin_watson",
-    "page_trend", "pinball_loss", "gearys_c",
-    "getis_ord", "semivariogram", "var_cvar",
-    "capm_beta", "sharpe_sortino", "stoch_osc",
-    "obv_trend", "t_closeness", "candidate_keys",
-    "reident_risk", "dunn_pairs", "kendall_w",
-    "ca_trend", "cohens_d", "hdr_quantiles",
-    "spc_rules", "err_eval", "mcc_eval",
-    "granger_lead", "trigram_paths", "ripley_k",
-    "abc_classes", "hhi_concentration", "yoy_growth",
-    "price_elasticity", "hellinger_sources", "burstiness_fano",
-    "gini_impurity", "theil_index", "atkinson_index",
-    "palma_ratio", "nmi_assoc", "chao1_richness",
-    "esd_outliers", "binseg_split", "cramers_v",
-    "kruskal_wallis", "fleiss_kappa", "spearman_corr",
-    "rbo_overlap", "filter_cascade", "kendall_tau",
-    "permutation_test", "ap_at_k", "inter_event_gaps",
-    "degree_assortativity", "bloom_fpr_sweep", "neyman_alloc",
-    "propensity_match_att", "hill_tail_index", "mcnemar_test",
-    "cochran_q", "log_odds_words", "info_gain",
-    "runs_test", "jarque_bera", "brown_forsythe",
-    "bollinger_breakouts", "partial_corr", "theil_u",
-    "funcdep_audit", "decision_stump", "clustering_coeff",
-    "slope_one", "rdd_estimate", "iv_wald",
-    "nelson_aalen", "hurst_exponent", "brier_decomp",
-    "grubbs_stat", "ljung_box", "return_levels",
-    "page_hinkley", "mann_kendall", "cramer_von_mises",
-    "vocab_coverage", "cliffs_delta", "odds_ratio",
-    "km_median", "seasonal_strength", "anova_oneway",
-    "bartlett", "morans_i", "auc_eval",
-    "bootstrap_ci", "chi_square", "cohen_kappa",
-    "corpus_pipeline_v2", "f1_report", "friedman_test",
-    "gini_lorenz", "kaplan_meier", "ks_test",
-    "lift_eval", "logrank_test", "lsh_band_sweep",
-    "lsh_recall", "mann_whitney", "minhash_estimate",
-    "ordinal_gamma", "percentile_cut", "rrf_fusion",
-    "survivorship", "weighted_median", "welch_ttest",
-    "wilcoxon_signed", "winsorized_stats", "autocorr_daily",
-    "centroid_classify", "corr_matrix", "daily_ohlc",
-    "ewma_daily", "frost_dates", "heat_index",
-    "heatwave_runs", "khop_reach", "knn_eval",
-    "overlap_join", "ref_integrity", "scd2_users",
-    "seasonal_decomp", "skew_profile", "spi_index",
-    "target_encode", "temporal_split", "terrain_gradient",
-    "threshold_alerts", "trailing_features", "asof_forward_join",
-    "gapfill_interp", "heaps_fit", "dup_ngrams",
-    "ppl_buckets", "window_funnel", "interdup_report",
-    "weighted_mean", "gridmet_pipeline", "corpus_pipeline_v3",
-    "kmv_set_ops", "ipw_ate", "session_paths",
-    "dsir_select", "curve_compare", "k_anonymity",
-    "boilerplate_report", "zone_map_prune", "selectivity_eval",
-    "heavy_hitters_mg", "histogram_docs", "zipf_fit",
-    "token_budget_alloc", "ivf_nprobe_sweep", "cv_folds",
-    "novelty_curve", "truncation_report", "source_jsd",
-    "source_entropy", "pii_flags", "cosine_topk_lsh",
-    "kmeans_assign", "bpe_merges", "embed_covariance",
-    "entity_resolution", "lm_scores", "containment_dups",
-    "quota_filter", "hard_negatives", "bpe_compression",
-    "cosine_topk", "simhash", "tpch_q15ish",
-    "tpch_q17ish", "tpch_q21ish", "tpch_q22ish",
-    "kmv_distinct", "link_prediction", "cuped_adjust",
-    "did_estimate", "hilbert_layout", "markov_attribution",
-    "woe_iv", "feature_hash", "qini_uplift",
-    "polygon_metrics", "dp_release", "holt_forecast",
-    "rsi_indicator", "capture_recapture", "line_dedup",
-    "mixture_weights", "jl_project", "tfidf_terms",
-    "cms_join_size", "bias_als", "mcv_stats",
-    "equiheight_bins", "join_order_advisor", "source_overlap",
-    "ridge_regression", "join_qerror", "layout_advisor",
-    "cooccurrence_topk", "vocab_topk", "impute_median",
-    "idw_interp", "dbscan_clusters", "item_similarity",
-    "cdc_apply", "hist_quantiles", "logit_gd",
-    "forecast_eval", "nb_language_id", "mrr_eval",
-    "ppr_scores", "pca_power", "geo_knn",
-    "sssp_hops", "weighted_median_pooled", "rolling_median",
-    "kcore_nodes", "dedup_report", "rfm_segments",
-    "basket_lift", "pq_codes", "hll_rollup",
-    "scd2_pit_enrich", "twap_daily", "coreset_assign",
-    "ndcg_eval", "multitouch_credit", "lpa_communities",
-    "session_windows", "hits_scores", "psi_drift",
-    "textrank_keywords", "cohort_ltv", "ivfpq_topk",
-    "conversion_lag", "cumulative_users", "rebased_series",
-    "theilsen_trend", "props_map", "calendar_gaps",
-    "ab_test", "skyline_parts", "dow_anomaly",
-    "rolling_actives", "benford_check", "embedding_stats",
-    "tpch_q2ish", "tpch_q3ish", "tpch_q4ish",
-    "tpch_q6ish", "tpch_q8ish", "tpch_q10ish",
-    "tpch_q11ish", "tpch_q12ish", "tpch_q14ish",
-    "tpch_q20ish", "max_dup_spans", "incremental_refresh",
-    "polygon_weights", "polygon_zonal_mean", "hex_density",
-    "quantile_normalize", "rag_pipeline", "pq_topk",
-    "funnel_steps", "retention_cohorts", "event_transitions",
-    "triangle_count", "jaccard_join", "fuzzy_join",
-    "mad_outliers", "ntile_bins", "snapshot_diff",
-    "zorder_layout", "media_dedup", "trending_topk",
-    "focal_mean", "topk_per_source", "trend_slope",
-    "token_drift", "readability", "degree_days",
-    "skew_join", "set_ops", "grouping_sets",
-    "range_frame_sum", "ivf_topk", "minhash_lsh_star",
-    "sequence_packing", "split_leakage_audit",
-]
-assert set(_CHECK_FIRST) <= set(_MERGED), sorted(set(_CHECK_FIRST) - set(_MERGED))
-ALL_QUERIES = {name: _MERGED[name] for name in _CHECK_FIRST}
-ALL_QUERIES.update({n: q for n, q in _MERGED.items() if n not in ALL_QUERIES})
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -259,8 +29,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _sql) in ALL_QUERIES.items()}
+    return {name: fn for name, (fn, _sql) in DOMAIN_QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_fn, sql) in ALL_QUERIES.items() if sql is not None}
+    return {name: sql for name, (_fn, sql) in DOMAIN_QUERIES.items()}

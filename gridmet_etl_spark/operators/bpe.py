@@ -31,8 +31,8 @@ left-to-right merge application, including runs: `<a><a><a>` under merge
 
 Ties in the pair argmax break on (count DESC, left ASC, right ASC) so the
 merge table is deterministic and cross-engine reproducible; the DuckDB
-oracle (contract_ext3.SQL_BPE_MERGES) unrolls the same rounds as chained
-CTEs and must agree exactly.
+oracle (SQL_BPE_MERGES in tests/offpath_queries/contract_ext3.py) unrolls
+the same rounds as chained CTEs and must agree exactly.
 
 Reference anchor: the reference engine has no tokenizer, but its
 vocabulary-style reductions (gridmet_etl/etl.py:428 serial aggregation)

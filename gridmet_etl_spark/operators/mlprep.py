@@ -805,14 +805,19 @@ def decision_stump(
     )
     maj = F.greatest(pl, nl - pl) + F.greatest(pr, nr - pr)
     rnd = lambda c: F.round(c, ndigits) + F.lit(0.0)  # noqa: E731
+    nt = F.col("_nt").cast("double")
+    # a pure split's gain IS the root entropy; rounding half-up would report
+    # more than H(Y), so the rounded gain is capped at H(Y) rounded down
+    scale = 10.0 ** ndigits
+    gain_cap = F.floor(t_root / nt * scale) / scale
     return best.select(
         F.col("_v").cast("long").alias("threshold"),
         nl.alias("n_left"),
         nr.cast("long").alias("n_right"),
         pl.alias("pos_left"),
         pr.cast("long").alias("pos_right"),
-        rnd(gain_n / F.col("_nt").cast("double")).alias("gain"),
-        rnd(maj.cast("double") / F.col("_nt").cast("double")).alias("stump_acc"),
+        F.least(rnd(gain_n / nt), gain_cap).alias("gain"),
+        rnd(maj.cast("double") / nt).alias("stump_acc"),
     )
 
 

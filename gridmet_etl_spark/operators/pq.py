@@ -13,7 +13,7 @@ Engine mapping — every stage is a DataFrame op with the same determinism
 discipline as the IVF/k-means path (lowest-id seeds, lowest-code ties,
 empty cells keep their centroid), so the whole index build AND the ADC
 search carry an exact DuckDB oracle (unrolled-Lloyd CTEs per subspace,
-contract_ext4.py):
+tests/offpath_queries/contract_ext4.py):
 
 - ``pq_codebooks``: m independent k-means run in the SAME job — the
   subspace id is just another grouping key. Per Lloyd round: one

@@ -1,6 +1,7 @@
 """Pre-driver validation of the __spark_entry__ contract: every queries()
 entry runs, and its oracle SQL produces the same rows (order-insensitive,
-column-name-sorted) in DuckDB — mirroring the driver's comparison."""
+column-name-sorted) in DuckDB — mirroring the driver's comparison. The
+off-path operators' queries (``tests/offpath_queries``) get the same check."""
 
 import math
 import os
@@ -12,6 +13,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from offpath_queries import OFFPATH_QUERIES  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -47,14 +49,19 @@ def _normalize(rows, columns):
     return sorted(out)
 
 
-@pytest.mark.parametrize("name", list(entrymod.queries().keys()))
+QUERIES = {
+    **{n: (fn, entrymod.oracle_sql().get(n)) for n, fn in entrymod.queries().items()},
+    **OFFPATH_QUERIES,
+}
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_query_matches_oracle(spark, ddb, name):
-    qfn = entrymod.queries()[name]
+    qfn, sql = QUERIES[name]
     sdf = qfn(spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
 
-    sql = entrymod.oracle_sql().get(name)
     if sql is None:
         assert len(spark_rows) >= 0  # rows-only check
         return

@@ -87,7 +87,7 @@ def test_fano_poisson_near_one_bursty_above(spark):
 
 
 def test_gini_impurity_pure_and_uniform(spark):
-    from gridmet_etl_spark.contract_ext28 import q_gini_impurity
+    from offpath_queries.contract_ext28 import q_gini_impurity
     import tempfile, os
 
     # synthesize a documents table: source P pure, source U uniform over 4

@@ -24,7 +24,7 @@ def _write_tables(spark, d, orders_rows, cust_rows):
 def test_nmi_matches_numpy(spark):
     import datetime
 
-    from gridmet_etl_spark.contract_ext30 import q_nmi_assoc
+    from offpath_queries.contract_ext30 import q_nmi_assoc
 
     rng = np.random.RandomState(4)
     segs = ["S0", "S1", "S2"]
@@ -64,7 +64,7 @@ def test_nmi_matches_numpy(spark):
 
 
 def test_chao1_matches_bruteforce(spark):
-    from gridmet_etl_spark.contract_ext30 import q_chao1_richness
+    from offpath_queries.contract_ext30 import q_chao1_richness
 
     rng = np.random.RandomState(6)
     vocab = [f"w{i}" for i in range(500)]

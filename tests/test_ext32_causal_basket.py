@@ -10,7 +10,7 @@ import numpy as np
 
 
 def test_qte_matches_numpy(spark):
-    from gridmet_etl_spark.contract_ext32 import q_qte_quartiles
+    from offpath_queries.contract_ext32 import q_qte_quartiles
 
     rng = np.random.RandomState(3)
     n = 4000
@@ -44,7 +44,7 @@ def test_qte_matches_numpy(spark):
 
 
 def test_apriori_triples_counts(spark):
-    from gridmet_etl_spark.contract_ext32 import q_apriori_triples
+    from offpath_queries.contract_ext32 import q_apriori_triples
 
     # 30 baskets of {A,B,C}, 10 of {A,B,D}, 5 of {A,C,D,E}
     baskets = (

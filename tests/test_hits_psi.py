@@ -49,7 +49,7 @@ def test_hits_proportional_to_normalized(spark):
 
 
 def test_psi_zero_for_identical_positive_for_shifted(spark):
-    from gridmet_etl_spark.contract_ext4 import _PSI_BINS, _PSI_W
+    from offpath_queries.contract_ext4 import _PSI_BINS, _PSI_W
 
     def psi(base_vals, cur_vals):
         rows = [("view", float(v)) for v in base_vals] + [

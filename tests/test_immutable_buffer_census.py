@@ -8,9 +8,8 @@ downgrades HashAggregate to SortAggregate — a per-partition sort of the
 whole input relation (the r9 minhash 80-GB-spill / r10 sign_test class).
 
 The census was documentation only (VERDICT r10 "What's wrong" #3): nothing
-stopped a 14th site from landing unclassified — the two plan guards
-(tools/audit_plans.py contract + --bench scans) only cover code a
-registered query or bench builder actually executes. This test closes the
+stopped a 14th site from landing unclassified — plan assertions only
+cover code a registered query or test actually executes. This test closes the
 loop: it scans the package source for the pattern and asserts the per-file
 site count matches the classified whitelist below. A new site anywhere
 (including in a file not listed here) fails the suite until it is
@@ -26,13 +25,8 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "gridmet_etl_spark")
 
 # (file -> expected number of pattern sites). Classification per
-# docs/SCALE.md census; "SQL" entries are DuckDB oracle strings (no Spark
-# plan), listed so a grep-level scan stays exhaustive rather than trying
-# to parse string contexts.
+# docs/SCALE.md census.
 CLASSIFIED = {
-    # SQL-oracle min_by inside DuckDB query strings — no Spark aggregation
-    "contract_ext18.py": 1,   # km final_surv oracle (SQL)
-    "contract_ext33.py": 1,   # RMST slast oracle (SQL)
     # micro-batch-bounded: a structured-streaming micro-batch IS the delta
     "streaming/cdc_stream.py": 1,
     # primitive value + primitive ordering -> mutable buffer, HashAggregate

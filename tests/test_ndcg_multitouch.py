@@ -4,7 +4,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from gridmet_etl_spark.contract_ext4 import q_multitouch_credit, q_ndcg_eval
+from offpath_queries.contract_ext4 import q_multitouch_credit, q_ndcg_eval
 
 SF_DIR = "/root/testdata/sf0.001"
 

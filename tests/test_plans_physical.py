@@ -203,14 +203,41 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
             spark.conf.set(k, v)
 
 
-def test_cfsv2_400m_stress_plan(spark):
-    """The 398M-cell-value stress geometry (bench.py, VERDICT r7 item 5)
-    compiles to the SAME plan as the production pipeline: exactly one
-    data exchange (output-group partials), weights broadcast, the 398M-row
-    grid never shuffles. Plan-only — the execution lives in bench.py."""
-    import bench
+def _cfsv2_400m_inputs(spark):
+    from pyspark.sql import functions as F
 
-    grid, weights = bench._cfsv2_400m_inputs(spark)
+    n_ens, n_days, ny, nx = 48, 28, 272, 272
+    n_cells = ny * nx
+    n = 4 * n_ens * n_days * n_cells
+    cell = F.col("id") / (4 * n_ens * n_days)
+    grid = spark.range(0, n, 1, 32).select(
+        F.element_at(
+            F.array(F.lit("tmmx"), F.lit("tmmn"), F.lit("pr"), F.lit("sph")),
+            (F.col("id") % 4 + 1).cast("int"),
+        ).alias("var"),
+        ((F.col("id") / 4) % n_ens).cast("int").alias("ens"),
+        F.date_add(
+            F.lit("2024-04-01"), ((F.col("id") / (4 * n_ens)) % n_days).cast("int")
+        ).alias("time"),
+        (cell.cast("long") % ny).cast("int").alias("i"),
+        (cell.cast("long") / ny).cast("int").alias("j"),
+        (F.sin(F.col("id") % 9973) * 10 + 285).alias("value"),
+    )
+    weights = spark.range(0, n_cells, 1, 4).select(
+        (F.col("id") % 2462 + 1).alias("feature_id"),
+        (F.col("id") % ny).cast("int").alias("i"),
+        (F.col("id") / ny).cast("long").cast("int").alias("j"),
+        (0.5 + F.pmod(F.col("id") * 7919, 1000) / 2000.0).alias("wght"),
+    )
+    return grid, weights
+
+
+def test_cfsv2_400m_stress_plan(spark):
+    """The 398M-cell-value CFSv2 stress geometry (4 vars x 48 members x 28
+    days x 272x272 cells, 2462 HRUs) compiles to the SAME plan as the
+    production pipeline: exactly one data exchange (output-group partials),
+    weights broadcast, the 398M-row grid never shuffles."""
+    grid, weights = _cfsv2_400m_inputs(spark)
     from gridmet_etl_spark.operators.weighted_agg import weighted_mean_wide
 
     df = weighted_mean_wide(

@@ -406,7 +406,7 @@ def test_corpus_pipeline_v2_recipe_semantics(spark):
     """The v2 manifest respects every gate: no benchmark leakage, quality
     and length cuts hold, per-source admitted tokens stay within quota,
     train shards are budget-packed."""
-    from gridmet_etl_spark.contract_ext3 import (
+    from offpath_queries.contract_ext3 import (
         _V2_MIN_TOKENS,
         _V2_NLL_CUT,
         _V2_SOURCE_BUDGET,
@@ -426,7 +426,7 @@ def test_corpus_pipeline_v2_recipe_semantics(spark):
 
 
 def test_lsh_recall_query_reports_sane_metrics(spark):
-    from gridmet_etl_spark.contract_ext3 import q_lsh_recall
+    from offpath_queries.contract_ext3 import q_lsh_recall
 
     r = q_lsh_recall(spark, "/root/testdata/sf0.001").collect()[0]
     assert r.n_true > 0 and r.n_cand > 0
@@ -437,7 +437,7 @@ def test_lsh_recall_query_reports_sane_metrics(spark):
 def test_hard_negatives_labels_differ_and_argmax(spark):
     import numpy as np
 
-    from gridmet_etl_spark.contract_ext3 import q_hard_negatives
+    from offpath_queries.contract_ext3 import q_hard_negatives
 
     sf = "/root/testdata/sf0.001"
     out = {r.query_id: (r.negative_id, r.sim) for r in q_hard_negatives(spark, sf).collect()}
@@ -459,7 +459,7 @@ def test_hard_negatives_labels_differ_and_argmax(spark):
 
 
 def test_bpe_compression_reduces_tokens(spark):
-    from gridmet_etl_spark.contract_ext3 import q_bpe_compression
+    from offpath_queries.contract_ext3 import q_bpe_compression
 
     rows = q_bpe_compression(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0

@@ -232,7 +232,7 @@ def test_streaming_line_dedup_matches_batch(spark, tmp_path):
 def test_corpus_v3_invariants(spark):
     """Canonical-only manifest, per-source share_temp constant and summing
     to 1, n_members ≥ 1, token counts consistent with kept lines."""
-    from gridmet_etl_spark.contract_ext8 import q_corpus_pipeline_v3
+    from offpath_queries.contract_ext8 import q_corpus_pipeline_v3
 
     out = q_corpus_pipeline_v3(spark, SF_DIR).collect()
     assert len(out) > 0

@@ -7,7 +7,7 @@ global sort."""
 
 import pytest
 
-from gridmet_etl_spark.contract_ext5 import (
+from offpath_queries.contract_ext5 import (
     q_tpch_q3ish,
     q_tpch_q6ish,
     q_tpch_q9ish,

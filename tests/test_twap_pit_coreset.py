@@ -91,7 +91,7 @@ def test_kcenter_radius_shrinks_with_k(spark, emb):
 def test_pit_enrich_no_lookahead(spark):
     """Every enriched tier must equal the tier of the LATEST signup at or
     before the purchase ts — and never a later one."""
-    from gridmet_etl_spark.contract_ext4 import q_scd2_pit_enrich
+    from offpath_queries.contract_ext4 import q_scd2_pit_enrich
     from gridmet_etl_spark.sources.readers import read_events
 
     out = {r.event_id: r.tier for r in q_scd2_pit_enrich(spark, SF_DIR).collect()}

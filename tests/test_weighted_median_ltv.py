@@ -33,7 +33,7 @@ def test_weighted_median_per_group(spark):
 
 
 def test_cohort_ltv_cumulative_monotone(spark):
-    from gridmet_etl_spark.contract_ext4 import q_cohort_ltv
+    from offpath_queries.contract_ext4 import q_cohort_ltv
 
     rows = q_cohort_ltv(spark, "/root/testdata/sf0.001").collect()
     assert rows

@@ -5,10 +5,9 @@ Drives the full slice-task ingest path — build_slice_tasks → mapInPandas
 fetch fan-out → partitioned zstd parquet landing — for ONE synthetic
 DAP-served year at the real gridMET CONUS grid (585 × 1386 cells, 365 daily
 steps ≈ 296M cells per variable; the reference's etl.py:273-281 fetches the
-same geometry through xarray/OPeNDAP serially). The repeatable monthly
-fan-out (no write) is bench.py::ingest_conus_month_25M; this tool adds the
-landing write and reports task sizing, throughput, and the on-disk
-partition layout for SCALE.md.
+same geometry through xarray/OPeNDAP serially). It reports task sizing,
+throughput, and the on-disk partition layout for SCALE.md; the repeatable
+small-scale ingest workload is perfbench's ``ingest_conus_days``.
 
 Usage: python tools/ingest_stress.py [--days 365] [--vars 1]
        [--batch-vars N] [--out DIR]
@@ -44,6 +43,34 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def _conus_fetcher(task: dict):
+    """Synthetic DAP decode at real wire geometry: one numpy-vectorized
+    long-form slice per task (the production fetcher's to_dataframe step);
+    value is a deterministic function of (i, j, day)."""
+    import numpy as np
+    import pandas as pd
+
+    days = pd.date_range(task["t0"], task["t1"], freq="D")
+    ii = np.arange(task["i0"], task["i1"] + 1, dtype=np.int32)
+    jj = np.arange(task["j0"], task["j1"] + 1, dtype=np.int32)
+    d, i, j = np.meshgrid(
+        np.arange(len(days), dtype=np.int32), ii, jj, indexing="ij"
+    )
+    d, i, j = d.ravel(), i.ravel(), j.ravel()
+    return pd.DataFrame(
+        {
+            "var": task["var"],
+            "ens": np.full(len(i), -1, dtype=np.int32),
+            "time": np.repeat(days.date, len(ii) * len(jj)),
+            "i": i,
+            "j": j,
+            "lat": 49.4 - i * (1.0 / 24.0),
+            "lon": -124.8 + j * (1.0 / 24.0),
+            "value": np.sin(i * 0.1) + np.cos(j * 0.1) + d * 0.01 + 285.0,
+        }
+    )
+
+
 def main() -> int:
     days = 365
     if "--days" in sys.argv:
@@ -59,8 +86,6 @@ def main() -> int:
         out = sys.argv[sys.argv.index("--out") + 1]
     # the reference's production unit: 6 gridMET variables per year
     all_vars = ["tmmx", "tmmn", "pr", "rmax", "rmin", "vs"][:n_vars]
-
-    from bench import _conus_fetcher
 
     from gridmet_etl_spark.session import get_spark
     from gridmet_etl_spark.sources.ingest import (
