@@ -38,7 +38,7 @@ def build_parser() -> argparse.ArgumentParser:
     g = sub.add_parser("gridmet-etl", help="historical daily gridMET ETL")
     g.add_argument("--grid", required=True, help="long-form grid parquet")
     g.add_argument("--weights", required=True, help="weights parquet or csv")
-    g.add_argument("--features", help="features parquet (enables bbox + fill)")
+    g.add_argument("--features", help="features table for --fill-missing")
     g.add_argument("--start-date", type=valid_date)
     g.add_argument("--end-date", type=valid_date)
     g.add_argument("--fid", default="feature_id", help="feature id column name")
@@ -53,7 +53,7 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--grid-ens", required=True)
     c.add_argument("--weights", required=True)
     c.add_argument("--elevation", required=True, help="elevation parquet or PRMS param file")
-    c.add_argument("--features")
+    c.add_argument("--features", help="features table for --fill-missing")
     c.add_argument("--start-date", type=valid_date)
     c.add_argument("--end-date", type=valid_date)
     c.add_argument("--method", type=int, choices=[1, 2], default=1,
@@ -116,7 +116,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name=f"gridmet_etl_spark_{args.command}")
 
     def _features(path: str | None, fid: str = "feature_id"):
-        if not path:
+        # only the fill reads features; the pipelines prune by the weights
+        if not (args.fill_missing and path):
             return None
         # reference dispatch (etl.py:549-568): GIS formats convert at ingest
         return read_features(spark, convert_features(path, fid_col=fid), fid)
@@ -152,9 +153,7 @@ def main(argv: list[str] | None = None) -> int:
         weights = _load_weights(spark, args.weights)
         elevation = _load_elevation(spark, args.elevation)
         features = _features(args.features)
-        common = dict(
-            features=features, start_date=args.start_date, end_date=args.end_date
-        )
+        common = dict(start_date=args.start_date, end_date=args.end_date)
         if args.method == 1:
             out = cfsv2_median_pipeline(grid_ens, weights, elevation, **common)
             prefix = f"{args.prefix}_median"

@@ -2,11 +2,16 @@
 
 Reference subsets the raster to the feature bounding box ± one cell buffer
 (0.04167°) before any compute, via a descending-latitude xarray slice
-(etl.py:307-340). The engine re-expresses it as an order-insensitive
-``between`` filter — strictly more robust than the reference's
-monotonicity-dependent slice (SURVEY §2.7 O3) — which Catalyst pushes into
-the Parquet scan (row-group min/max skipping; partition pruning when the
-grid is written partitioned by spatial tile).
+(etl.py:307-340). The pipelines do not: they prune the grid by the weights
+table, whose broadcast join on (i, j) keeps exactly the cells some HRU
+weights — no features, no CRS and no eager Spark job. ``bbox_filter``
+stays as the standalone P2 predicate, an order-insensitive ``between``
+filter (more robust than the reference's monotonicity-dependent slice,
+SURVEY §2.7 O3) that Catalyst pushes into the Parquet scan. Its bounds
+from ``feature_bounds`` are the bbox of feature CENTROIDS, so it can drop
+weighted cells of an HRU that reaches more than the buffer past its
+centroid; it is no substitute for the weights prune. ``time_filter`` (P3)
+is the pipelines' temporal prune.
 """
 
 from __future__ import annotations

@@ -8,10 +8,11 @@ Reference semantics (the gdptools ``AggGen`` contract as configured at
   result (missing in → NULL out; this engine has always emitted SQL NULL,
   not NaN, for poisoned groups), because the denominator counts every
   weight. Assumption (ADVICE r11): weights are finite and non-NaN — wght is
-  an area fraction in (0, 1] by construction (weight_sum_qa guards Σw) — so
-  the only NaN a strict-path sum can see is the injected missing-poison; a
-  hypothetical NaN weight or ±Inf overflow would yield NULL where a
-  separate count(missing)-guard would have returned NaN.
+  an area fraction in (0, 1] by construction. Nothing here enforces that:
+  ``weight_sum_qa`` only reports per-feature Σw, and no pipeline calls it.
+  So the only NaN a strict-path sum can see is the injected missing-poison;
+  a NaN weight or ±Inf overflow would yield NULL where a separate
+  count(missing)-guard would have returned NaN.
 - ``stat_method="masked_mean"`` (A2, the ``--partial`` path, etl.py:690):
   normalizes by Σ w over NON-NULL cells only, so partial coverage still
   yields a value; all-null groups yield NULL.
@@ -41,6 +42,34 @@ def _is_missing(v: Column, dtype: str) -> Column:
     return v.isNull()
 
 
+def _mean_expr(
+    v: Column, missing: Column, masked: bool, cond: Column | None = None
+) -> Column:
+    """Σ wght·v / Σ wght over the rows where ``cond`` holds (all rows when
+    it is None).
+
+    ``masked`` normalizes over non-missing cells only; all-missing → NULL
+    (0/0). Otherwise any missing cell poisons the group: the poison is
+    folded into the sum itself (missing → NaN, which SUM propagates, unlike
+    NULL, which it skips; the final projection maps NaN back to NULL)
+    instead of a separate count(missing) guard buffer — one less
+    aggregation buffer per group in the partial rows crossing the exchange
+    (guide §2.3). A group with no missing cell sums the identical terms in
+    the identical order, so its output is bit-for-bit the guarded plan's
+    (r11).
+    """
+    w = F.col("wght")
+
+    def only(x: Column) -> Column:
+        return x if cond is None else F.when(cond, x)
+
+    if masked:
+        keep = ~missing if cond is None else cond & ~missing
+        return F.sum(F.when(keep, w * v)) / F.sum(F.when(keep, w))
+    num = F.sum(only(F.when(missing, F.lit(float("nan"))).otherwise(w * v)))
+    return F.when(F.isnan(num), F.lit(None)).otherwise(num) / F.sum(only(w))
+
+
 def weighted_mean(
     grid: DataFrame,
     weights: DataFrame,
@@ -57,24 +86,9 @@ def weighted_mean(
     """
     joined = grid.join(F.broadcast(weights), on=["i", "j"], how="inner")
     keys = ["feature_id", *extra_keys, "time"]
-    v, w = F.col(value_col), F.col("wght")
-    missing = _is_missing(v, dict(grid.dtypes)[value_col])
-    if masked:
-        # normalize over non-missing cells only; all-missing → NULL (0/0)
-        num = F.sum(F.when(~missing, w * v))
-        den = F.sum(F.when(~missing, w))
-        return joined.groupBy(*keys).agg((num / den).alias("value"))
-    # strict mean: any missing cell must poison the group. Fold the poison
-    # into the sum itself (missing → NaN, which SUM propagates; the final
-    # projection maps NaN back to NULL) instead of a separate
-    # count(missing) guard buffer — one less aggregation buffer per group
-    # in the partial rows crossing the exchange (guide §2.3), and the
-    # no-missing case sums the identical terms in the identical order, so
-    # the output is bit-for-bit the old plan's (r11).
-    num = F.sum(F.when(missing, F.lit(float("nan"))).otherwise(w * v))
-    den = F.sum(w)
+    missing = _is_missing(F.col(value_col), dict(grid.dtypes)[value_col])
     return joined.groupBy(*keys).agg(
-        (F.when(F.isnan(num), F.lit(None)).otherwise(num) / den).alias("value")
+        _mean_expr(F.col(value_col), missing, masked).alias("value")
     )
 
 
@@ -139,29 +153,11 @@ def weighted_mean_wide(
     )
     joined = joined.withColumn("_vi", vcode)
     keys = ["feature_id", *extra_keys, "time"]
-    w = F.col("wght")
     vmissing = _is_missing(F.col("value"), dict(grid.dtypes)["value"])
-    aggs = []
-    for idx, var in enumerate(variables):
-        is_var = F.col("_vi") == (idx + 1)
-        if masked:
-            valid = is_var & ~vmissing
-            num = F.sum(F.when(valid, w * F.col("value")))
-            den = F.sum(F.when(valid, w))
-            aggs.append((num / den).alias(var))
-        else:
-            # missing → NaN (poisons the sum the way the old count-guard
-            # nulled it); non-missing w*value terms are identical and
-            # summed in the same order, so the no-missing case is
-            # bit-identical to the old plan.
-            poison = F.when(vmissing, F.lit(float("nan"))).otherwise(
-                w * F.col("value")
-            )
-            num = F.sum(F.when(is_var, poison))
-            den = F.sum(F.when(is_var, w))
-            aggs.append(
-                (F.when(F.isnan(num), F.lit(None)).otherwise(num) / den).alias(var)
-            )
+    aggs = [
+        _mean_expr(F.col("value"), vmissing, masked, F.col("_vi") == (idx + 1)).alias(var)
+        for idx, var in enumerate(variables)
+    ]
     return joined.groupBy(*keys).agg(*aggs)
 
 

@@ -12,6 +12,12 @@ headroom over the reference).
 Relative humidity (helper.py:204-227) is derived from KELVIN temps + sph +
 elevation BEFORE the K→°C conversion, matching the reference's order
 (run_weights derives RH at etl.py:229; finalize converts at etl.py:455-464).
+
+Spatial prune (P2): the weights table names every cell an HRU needs, so the
+grid is pruned by it, never by a bbox of the features. Method 2's broadcast
+join on (i, j) does that by itself; method 1 runs the median before that
+join, so it first semi-joins the grid to the weighted (i, j) cells.
+``features`` is read only by the fill.
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.physics import relative_humidity
 from ..functions.units import kelvin_to_celsius
-from ..operators.bbox import bbox_filter, feature_bounds, time_filter
+from ..operators.bbox import time_filter
 from ..operators.ensemble import ensemble_median
 from ..operators.fill import fill_missing
 from ..operators.weighted_agg import weighted_mean_wide
@@ -54,13 +60,15 @@ def cfsv2_median_pipeline(
     fill: bool = False,
 ) -> DataFrame:
     """Method 1: ensemble median per cell → weighted mean → wide
-    (feature_id, time, tmax, tmin, prcp, humidity)."""
+    (feature_id, time, tmax, tmin, prcp, humidity). Only the weighted cells
+    reach the median shuffle."""
     source_vars = [v[0] for v in CFSV2_VARS.values()]
-    if features is not None:
-        grid_ens = bbox_filter(grid_ens, feature_bounds(features))
     if start_date and end_date:
         grid_ens = time_filter(grid_ens, start_date, end_date)
-    med = ensemble_median(grid_ens.filter(F.col("var").isin(source_vars)))  # A3
+    cells = grid_ens.filter(F.col("var").isin(source_vars)).join(
+        F.broadcast(weights.select("i", "j")), on=["i", "j"], how="left_semi"
+    )  # P2
+    med = ensemble_median(cells)  # A3
     wide = weighted_mean_wide(med, weights, source_vars)  # J1+A1, one shuffle
     out = _finalize(wide, elevation, keys=("feature_id", "time"))
     if fill:
@@ -83,8 +91,6 @@ def cfsv2_ensemble_pipeline(
     (feature_id, ens, time, tmax, tmin, prcp, humidity); write with
     ``partitionBy("ens")`` to reproduce the per-member file layout."""
     source_vars = [v[0] for v in CFSV2_VARS.values()]
-    if features is not None:
-        grid_ens = bbox_filter(grid_ens, feature_bounds(features))
     if start_date and end_date:
         grid_ens = time_filter(grid_ens, start_date, end_date)
     wide = weighted_mean_wide(

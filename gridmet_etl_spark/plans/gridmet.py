@@ -9,6 +9,11 @@ the caller writes or collects.
 Scale notes: grid is the 100 TB fact side → only filters and one broadcast
 join touch it before the single groupBy shuffle; the pivot reuses that
 aggregated (already small: |features| × |days| × |vars|) result.
+
+Spatial prune: the inner broadcast join on (i, j) keeps exactly the cells
+the weights table names, so no bbox step runs before it. A bbox of the
+features would be a lossy stand-in for that set (an HRU can reach past its
+centroid's buffered box) and would cost an eager job to compute.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.physics import mean_humidity
 from ..functions.units import kelvin_to_celsius
-from ..operators.bbox import bbox_filter, feature_bounds, time_filter
+from ..operators.bbox import time_filter
 from ..operators.fill import fill_missing
 from ..operators.weighted_agg import weighted_mean_wide
 from ..schemas import GRIDMET_VARS
@@ -40,11 +45,11 @@ def gridmet_pipeline(
     `*_converted.nc` content (etl.py:712-755).
 
     ``partial`` selects masked_mean (--partial, cli.py:83-89);
-    ``fill`` runs the nearest-neighbor fill (--fill-missing).
+    ``fill`` runs the nearest-neighbor fill (--fill-missing), the only step
+    that reads ``features``. The grid is pruned to the weighted cells by the
+    weights join itself (P2).
     """
     source_vars = [v[0] for v in GRIDMET_VARS.values()]
-    if features is not None:
-        grid = bbox_filter(grid, feature_bounds(features))  # P2
     if start_date and end_date:
         grid = time_filter(grid, start_date, end_date)  # P3
 

@@ -48,9 +48,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python data sources (sources/grid_source.py) implement
-        # pushFilters; Spark refuses such readers unless this is on
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Shuffle/spill codec: zstd over the lz4 default (r11, guide §2.3/§9).
         # Measured on this engine twice: the r10 ingest-year compaction

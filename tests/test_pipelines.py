@@ -2,6 +2,7 @@
 pandas implementation (SURVEY §5 item 3), schema asserted against the golden
 headers (gm_header.md:8-84, cfsv2_*_header.md)."""
 
+import datetime
 import os
 
 import numpy as np
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from gridmet_etl_spark.plans.cfsv2 import cfsv2_ensemble_pipeline, cfsv2_median_pipeline
 from gridmet_etl_spark.plans.gridmet import gridmet_pipeline
+from gridmet_etl_spark.schemas import FEATURES_SCHEMA, GRID_SCHEMA, WEIGHTS_SCHEMA
 
 
 def _pd_weighted(g, w, masked):
@@ -103,3 +105,54 @@ def test_ensemble_median_consistency(spark, grid_ens, weights_ens, elevation):
         .count()
     )
     assert bad == 0
+
+
+EDGE_RUNS = {
+    "gridmet_strict": ((-1,), lambda g, w, f, e: gridmet_pipeline(g, w, f)),
+    "gridmet_partial": ((-1,), lambda g, w, f, e: gridmet_pipeline(g, w, f, partial=True)),
+    "cfsv2_median": ((0, 1, 2), lambda g, w, f, e: cfsv2_median_pipeline(g, w, e, f)),
+}
+
+
+@pytest.mark.parametrize("run", list(EDGE_RUNS))
+def test_edge_hru_keeps_all_weighted_cells(spark, run):
+    """An HRU three 1/4° cells wide, centroid on the middle cell: the outer
+    cells lie a whole cell past the centroid, farther than a one-cell
+    (1/24°) buffer around a centroid bbox reaches. Every weighted cell must
+    count: (10 + 20 + 90) / 3 = 40, not the middle cell's 20."""
+    members, build = EDGE_RUNS[run]
+    day = datetime.date(1980, 1, 1)
+    cells = [(-100.25, 10.0), (-100.0, 20.0), (-99.75, 90.0)]
+    # members spread ±1 around the cell value, so their median is the value
+    grid = spark.createDataFrame(
+        [
+            ("pr", ens, day, 0, j, 40.0, lon, v + (ens - members[len(members) // 2]))
+            for ens in members
+            for j, (lon, v) in enumerate(cells)
+        ],
+        GRID_SCHEMA,
+    )
+    weights = spark.createDataFrame([(1, 0, j, 1 / 3) for j in range(3)], WEIGHTS_SCHEMA)
+    features = spark.createDataFrame([(1, 40.0, -100.0, None)], FEATURES_SCHEMA)
+    elevation = spark.createDataFrame([(1, 1000.0)], "feature_id long, hru_elev double")
+    rows = build(grid, weights, features, elevation).select("prcp").collect()
+    assert len(rows) == 1
+    assert rows[0].prcp == pytest.approx(40.0, rel=1e-12)
+
+
+def test_pipeline_build_runs_no_spark_job(
+    spark, grid, weights, grid_ens, weights_ens, elevation, features
+):
+    """Building each pipeline with ``features`` is lazy: the spatial prune
+    is the weights join, so no job runs before the caller writes."""
+    sc = spark.sparkContext
+    group = "test_pipeline_build_runs_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        gridmet_pipeline(grid, weights, features, partial=True)
+        cfsv2_median_pipeline(grid_ens, weights_ens, elevation, features)
+        cfsv2_ensemble_pipeline(grid_ens, weights_ens, elevation, features)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -10,7 +10,7 @@ from gridmet_etl_spark.operators.weighted_agg import (
     weighted_mean_all_vars,
     weighted_mean_wide,
 )
-from gridmet_etl_spark.plans.cfsv2 import cfsv2_ensemble_pipeline
+from gridmet_etl_spark.plans.cfsv2 import cfsv2_ensemble_pipeline, cfsv2_median_pipeline
 from gridmet_etl_spark.plans.gridmet import gridmet_pipeline
 
 GRIDMET_SRC = ["tmmx", "tmmn", "pr", "rmax", "rmin", "vs"]
@@ -104,6 +104,22 @@ def test_ensemble_pipeline_single_shuffle_agg(spark, grid_ens, weights_ens, elev
     plan = _plan(cfsv2_ensemble_pipeline(grid_ens, weights_ens, elevation))
     n_exchanges = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n_exchanges == 1, plan
+
+
+def test_median_pipeline_prunes_median_input_by_weights(
+    spark, grid_ens, weights_ens, elevation, features
+):
+    """Method 1: a broadcast left-semi join on the weighted (i, j) cells
+    feeds the median, and the plan keeps its two data exchanges (median,
+    weighted mean) even when ``features`` is passed."""
+    import re
+
+    plan = _plan(cfsv2_median_pipeline(grid_ens, weights_ens, elevation, features))
+    assert re.search(r"BroadcastHashJoin \[i#\d+, j#\d+\], \[i#\d+, j#\d+\], LeftSemi", plan), plan
+    median_input = plan[plan.index("partial_percentile"):]
+    assert "LeftSemi" in median_input, plan
+    n_exchanges = plan.count("Exchange") - plan.count("BroadcastExchange")
+    assert n_exchanges == 2, plan
 
 
 def test_whole_stage_codegen_covers_physics(spark, grid_ens, weights_ens, elevation):
