@@ -109,50 +109,52 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{'FRESH' if fresh else 'STALE'} {ds}")
         return 0 if all(status.values()) else 1
 
+    if args.command in ("gridmet-etl", "cfsv2-etl") and args.fill_missing and not args.features:
+        print("--fill-missing requires --features", file=sys.stderr)
+        return 2
+
+    from .operators.fill import fill_missing
     from .session import get_spark
     from .sources.readers import convert_features, read_features, read_grid
     from .sources.writers import write_fill_map_csv, write_output
 
     spark = get_spark(app_name=f"gridmet_etl_spark_{args.command}")
 
-    def _features(path: str | None, fid: str = "feature_id"):
-        # only the fill reads features; the pipelines prune by the weights
-        if not (args.fill_missing and path):
-            return None
+    def _fill(out, fid: str = "feature_id"):
+        """--fill-missing (fill_onhm_ncf): nearest-donor fill of the
+        pipeline output, with the mapping CSV persisted beside it (K3,
+        helper.py:75-77). Only the fill reads features."""
         # reference dispatch (etl.py:549-568): GIS formats convert at ingest
-        return read_features(spark, convert_features(path, fid_col=fid), fid)
+        features = read_features(spark, convert_features(args.features, fid_col=fid), fid)
+        out, fmap = fill_missing(out, features)
+        write_fill_map_csv(fmap, args.out)
+        return out
 
     if args.command == "gridmet-etl":
         from .plans.gridmet import gridmet_pipeline
 
         grid = read_grid(spark, args.grid)
         weights = _load_weights(spark, args.weights, args.fid)
-        features = _features(args.features, args.fid)
-        if args.fill_missing and features is None:
-            print("--fill-missing requires --features", file=sys.stderr)
-            return 2
         out = gridmet_pipeline(
             grid,
             weights,
-            features=features,
             start_date=args.start_date,
             end_date=args.end_date,
             partial=args.partial,
-            fill=args.fill_missing,
             bug_compat_humidity=args.bug_compat_humidity,
         )
+        if args.fill_missing:
+            out = _fill(out, args.fid)
         path = write_output(out, args.out, file_prefix=args.prefix)
         print(f"wrote {path}")
         return 0
 
     if args.command == "cfsv2-etl":
-        from .operators.fill import fill_missing as fill_op
         from .plans.cfsv2 import cfsv2_ensemble_pipeline, cfsv2_median_pipeline
 
         grid_ens = read_grid(spark, args.grid_ens)
         weights = _load_weights(spark, args.weights)
         elevation = _load_elevation(spark, args.elevation)
-        features = _features(args.features)
         common = dict(start_date=args.start_date, end_date=args.end_date)
         if args.method == 1:
             out = cfsv2_median_pipeline(grid_ens, weights, elevation, **common)
@@ -163,11 +165,7 @@ def main(argv: list[str] | None = None) -> int:
             prefix = f"{args.prefix}_ensemble"
             partition_by = ("ens",)  # per-member layout (K4's _N suffix)
         if args.fill_missing:
-            if features is None:
-                print("--fill-missing requires --features", file=sys.stderr)
-                return 2
-            out, fmap = fill_op(out, features)
-            write_fill_map_csv(fmap, args.out)
+            out = _fill(out)
             prefix = f"filled_{prefix}"
         if args.run_date:
             # T3: each forecast cycle is a self-contained snapshot partition

@@ -574,7 +574,7 @@ def q_polygon_zonal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)  # see q_polygon_weights
     )
     w = cell_coverage_weights(cells, polys, cell_size=_PIP_RES, supersample=_PIP_S)
-    out = weighted_mean(grid, w, value_col="value")
+    out = weighted_mean(grid, w)
     return out.select("feature_id", "time", F.round("value", R).alias("value"))
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def ensemble_median(grid_ens: DataFrame, value_col: str = "value") -> DataFrame:
+def ensemble_median(grid_ens: DataFrame) -> DataFrame:
     """Exact median over the ensemble axis per (var, time, i, j) cell.
 
     Keeps lat/lon via first() (functionally dependent on i/j).
@@ -29,7 +29,7 @@ def ensemble_median(grid_ens: DataFrame, value_col: str = "value") -> DataFrame:
     return grid_ens.groupBy("var", "time", "i", "j").agg(
         F.first("lat").alias("lat"),
         F.first("lon").alias("lon"),
-        F.median(value_col).alias("value"),
+        F.median("value").alias("value"),
     )
 
 

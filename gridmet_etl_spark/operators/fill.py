@@ -6,13 +6,15 @@ features into missing/present point sets, ``sjoin_nearest`` (k=1 with
 distance, helper.py:72), persist the mapping CSV, then scatter-copy every
 variable's full series from donor to missing feature (helper.py:85-90).
 
-Spark design — two strategies, same semantics:
-- ``nearest_donor``: missing × present cross join + distance + window top-1.
-  Exact; fine when |missing| * |present| is modest (the real domain is
-  2,462 features).
-- ``nearest_donor_bucketed``: for planet-scale feature tables, prefilter by
-  coarse spatial bucket (cell id ±1 ring, 9-way neighbor join) before
-  ranking, with brute-force fallback for buckets with no present neighbor.
+Spark design — one strategy, fully lazy: building a fill launches no Spark
+job. ``nearest_donor`` is an exact broadcast cross join of missing ×
+present features + distance + window top-1; both sides are feature tables
+(the real domain is ~10⁵ HRUs with few missing), so no spatial
+bucketing is needed, and the scatter runs on the features × days output.
+The first timestep is found by a broadcast semi-join against
+``min(time)``, not a driver collect, and an empty missing set needs no
+special case: it yields an empty map, and ``scatter_fill`` then returns
+the output unchanged.
 
 Distance is squared-euclidean on (lat, lon) degrees — monotonic with
 geopandas' euclidean sjoin_nearest on the same flat coordinates, so the
@@ -25,24 +27,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def missingness_split(
-    output_long: DataFrame, features: DataFrame, first_time=None, value_col: str | None = None
-) -> tuple[DataFrame, DataFrame]:
+def missingness_split(output_long: DataFrame, features: DataFrame) -> tuple[DataFrame, DataFrame]:
     """P5/P6: classify features by null-ness of their value at the first
     timestep (the reference probes one variable at the first date only,
     helper.py:45). Features absent from the output entirely (no weights)
     count as missing — the reference sees those as all-NaN series.
 
-    ``value_col`` defaults to "value" (long form) or the first non-key
-    column (wide form). Returns (missing_features, present_features), both
-    with feature_id/lat/lon.
+    The probed value is "value" (long form) or the first non-key column
+    (wide form). Returns (missing_features, present_features), both with
+    feature_id/lat/lon.
     """
-    if value_col is None:
-        non_keys = [c for c in output_long.columns if c not in ("feature_id", "ens", "time")]
-        value_col = "value" if "value" in output_long.columns else non_keys[0]
-    if first_time is None:
-        first_time = output_long.agg(F.min("time")).collect()[0][0]  # A4-style probe
-    first = output_long.filter(F.col("time") == F.lit(first_time))
+    non_keys = [c for c in output_long.columns if c not in ("feature_id", "ens", "time")]
+    value_col = "value" if "value" in output_long.columns else non_keys[0]
+    first_time = output_long.agg(F.min("time").alias("time"))
+    first = output_long.join(F.broadcast(first_time), "time", "left_semi")
     present_ids = first.filter(F.col(value_col).isNotNull()).select("feature_id").distinct()
     missing = features.join(present_ids, "feature_id", "left_anti")
     present = features.join(present_ids, "feature_id", "left_semi")
@@ -75,59 +73,6 @@ def nearest_donor(missing: DataFrame, present: DataFrame) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("missing_id", "donor_id", "distance")
     )
-
-
-def nearest_donor_bucketed(
-    missing: DataFrame, present: DataFrame, cell_deg: float = 1.0
-) -> DataFrame:
-    """Scale path for J2: join on coarse spatial buckets (3×3 neighborhood)
-    instead of full cross join. Falls back to exact search for missing
-    features whose neighborhood had no donors (widening rings would be the
-    production refinement; one fallback pass keeps it exact)."""
-    inv = 1.0 / cell_deg
-
-    def bucketed(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.col("feature_id").alias(f"{prefix}_id"),
-            F.col("lat").alias(f"{prefix}_lat"),
-            F.col("lon").alias(f"{prefix}_lon"),
-            F.floor(F.col("lat") * inv).cast("int").alias(f"{prefix}_bi"),
-            F.floor(F.col("lon") * inv).cast("int").alias(f"{prefix}_bj"),
-        )
-
-    m = bucketed(missing, "m")
-    p = bucketed(present, "p")
-    # explode each missing feature into its 9 neighbor buckets
-    offsets = F.expr("explode(sequence(-1, 1))")
-    m9 = (
-        m.withColumn("di", offsets)
-        .withColumn("dj", F.expr("explode(sequence(-1, 1))"))
-        .withColumn("bi", F.col("m_bi") + F.col("di"))
-        .withColumn("bj", F.col("m_bj") + F.col("dj"))
-    )
-    cand = m9.join(
-        p.withColumnRenamed("p_bi", "bi").withColumnRenamed("p_bj", "bj"),
-        on=["bi", "bj"],
-        how="inner",
-    )
-    dist2 = (F.col("m_lat") - F.col("p_lat")) ** 2 + (F.col("m_lon") - F.col("p_lon")) ** 2
-    w = Window.partitionBy("m_id").orderBy(F.col("distance"), F.col("p_id"))
-    near = (
-        cand.withColumn("distance", F.sqrt(dist2))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("m_id").alias("missing_id"),
-            F.col("p_id").alias("donor_id"),
-            "distance",
-        )
-    )
-    # exact fallback for neighborhoods with no donor
-    unmatched = missing.join(
-        near.select(F.col("missing_id").alias("feature_id")), "feature_id", "left_anti"
-    )
-    fallback = nearest_donor(unmatched, present)
-    return near.unionByName(fallback)
 
 
 def scatter_fill(output_long: DataFrame, fill_map: DataFrame) -> DataFrame:
@@ -165,21 +110,19 @@ def read_fill_map(spark, path: str) -> DataFrame:
 
 
 def fill_missing(
-    output_long: DataFrame, features: DataFrame, bucketed: bool = False
+    output_long: DataFrame, features: DataFrame | None
 ) -> tuple[DataFrame, DataFrame]:
-    """Full fill pipeline: split → nearest → scatter. Also materializes rows
-    for features with NO output at all (the reference's NetCDF has an all-NaN
-    row for them; long form simply has no rows) by cross-joining the missing
-    ids with the donor series. Returns (filled_output, fill_map).
+    """Full fill pipeline (--fill-missing, helper.py:9-122): split → nearest
+    → scatter. Features with NO output at all (the reference's NetCDF has
+    an all-NaN row for them; long form simply has no rows) get their
+    donor's series too. Returns (filled_output, fill_map); the caller
+    persists the map (K3, ``sources.writers.write_fill_map_csv``).
 
-    Idempotence property (§5): a second pass finds no missing features.
+    Idempotence property (§5): a second pass finds no missing features,
+    so its map is empty and the output passes through unchanged.
     """
+    if features is None:
+        raise ValueError("the fill requires the features table")
     missing, present = missingness_split(output_long, features)
-    if missing.isEmpty():  # A5 short-circuit (helper.py:48-50)
-        return output_long, missing.select(
-            F.col("feature_id").alias("missing_id"),
-            F.lit(None).cast("long").alias("donor_id"),
-            F.lit(None).cast("double").alias("distance"),
-        )
-    nn = nearest_donor_bucketed(missing, present) if bucketed else nearest_donor(missing, present)
+    nn = nearest_donor(missing, present)
     return scatter_fill(output_long, nn), nn

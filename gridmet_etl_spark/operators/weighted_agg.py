@@ -73,22 +73,21 @@ def _mean_expr(
 def weighted_mean(
     grid: DataFrame,
     weights: DataFrame,
-    value_col: str = "value",
     extra_keys: tuple[str, ...] = (),
     masked: bool = False,
 ) -> DataFrame:
     """grid ⋈ broadcast(weights) on (i, j) → weighted mean per
     (feature_id, *extra_keys, time).
 
-    Returns columns ``feature_id, *extra_keys, time, value`` (aliased
-    ``value``). ``masked=False`` reproduces stat_method="mean" (NaN
-    poisoning); ``masked=True`` reproduces "masked_mean".
+    Returns columns ``feature_id, *extra_keys, time, value``.
+    ``masked=False`` reproduces stat_method="mean" (NaN poisoning);
+    ``masked=True`` reproduces "masked_mean".
     """
     joined = grid.join(F.broadcast(weights), on=["i", "j"], how="inner")
     keys = ["feature_id", *extra_keys, "time"]
-    missing = _is_missing(F.col(value_col), dict(grid.dtypes)[value_col])
+    missing = _is_missing(F.col("value"), dict(grid.dtypes)["value"])
     return joined.groupBy(*keys).agg(
-        _mean_expr(F.col(value_col), missing, masked).alias("value")
+        _mean_expr(F.col("value"), missing, masked).alias("value")
     )
 
 
@@ -97,17 +96,15 @@ def weighted_mean_all_vars(
     weights: DataFrame,
     variables: list[str] | None = None,
     masked: bool = False,
-    with_ens: bool = False,
 ) -> DataFrame:
     """Long-form multi-variable weighted mean: one shuffle computes every
-    variable (and every ensemble member when ``with_ens``) at once.
+    variable at once.
 
-    Output: ``feature_id [, ens], time, var, value``.
+    Output: ``feature_id, var, time, value``.
     """
     if variables is not None:
         grid = grid.filter(F.col("var").isin(variables))  # P7 projection
-    extra = ("ens", "var") if with_ens else ("var",)
-    return weighted_mean(grid, weights, extra_keys=extra, masked=masked)
+    return weighted_mean(grid, weights, extra_keys=("var",), masked=masked)
 
 
 def weighted_mean_wide(

@@ -72,8 +72,6 @@ def cfsv2_median_pipeline(
     wide = weighted_mean_wide(med, weights, source_vars)  # J1+A1, one shuffle
     out = _finalize(wide, elevation, keys=("feature_id", "time"))
     if fill:
-        if features is None:
-            raise ValueError("fill=True requires the features table")
         out, _ = fill_missing(out, features)
     return out
 
@@ -98,7 +96,5 @@ def cfsv2_ensemble_pipeline(
     )  # E1 rewrite: all 48 members + all vars in one shuffle
     out = _finalize(wide, elevation, keys=("feature_id", "ens", "time"))
     if fill:
-        if features is None:
-            raise ValueError("fill=True requires the features table")
         out, _ = fill_missing(out, features)
     return out

@@ -73,7 +73,5 @@ def gridmet_pipeline(
     )
 
     if fill:
-        if features is None:
-            raise ValueError("fill=True requires the features table")
-        wide, _fill_map = fill_missing(wide, features)
+        wide, _ = fill_missing(wide, features)
     return wide

@@ -55,12 +55,9 @@ def get_spark(
         # probe (lz4 55-59 s vs zstd 24-40 s best — the partial-agg exchange
         # is disk-bound, and ~3× fewer shuffle bytes beats the extra CPU on
         # every probe rep). Cluster-safe: zstd is the standing
-        # recommendation for shuffle-heavy batch ETL; override via
-        # SPARK_GRAFT_SHUFFLE_CODEC if a deployment prefers lz4.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_CODEC", "zstd"),
-        )
+        # recommendation for shuffle-heavy batch ETL; a deployment that
+        # prefers lz4 passes it through ``extra_conf``.
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

@@ -2,9 +2,13 @@
 
 Canonical storage is Parquet; the reference's GeoParquet/shapefile/NetCDF/
 OPeNDAP inputs all cross an ingest boundary into the long-form tables of
-schemas.py. Each reader applies the explicit schema (no inference, matching
-the reference's fixed schemas §1.3) so plans are stable and column pruning /
-predicate pushdown reach the scan.
+schemas.py. The readers cast their input into those fixed schemas (the
+reference's fixed schemas §1.3), so downstream plans see stable column
+types and column pruning / predicate pushdown still reach the scan. Only
+``read_documents_jsonl`` declares its schema up front. The parquet readers
+(``read_grid``, ``read_weights_parquet``, ``read_features``, ...) let Spark
+infer the schema from the file footers, which costs one small Spark job
+per call, and then cast; ``read_weights_csv`` reads strings and casts.
 """
 
 from __future__ import annotations

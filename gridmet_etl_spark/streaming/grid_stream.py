@@ -15,28 +15,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.weighted_agg import weighted_mean_wide
-
-GRID_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("var", T.StringType(), False),
-        T.StructField("ens", T.IntegerType(), False),
-        T.StructField("time", T.DateType(), False),
-        T.StructField("i", T.IntegerType(), False),
-        T.StructField("j", T.IntegerType(), False),
-        T.StructField("lat", T.DoubleType(), False),
-        T.StructField("lon", T.DoubleType(), False),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
+from ..schemas import GRID_SCHEMA
 
 
 def stream_grid(
     spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    reader = spark.readStream.schema(GRID_STREAM_SCHEMA)
+    reader = spark.readStream.schema(GRID_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(landing_dir)
@@ -71,7 +58,7 @@ def incremental_weighted_agg(
         spark = batch_df.sparkSession
         if landing_dir is not None:
             dates = [r.time for r in batch_df.select("time").distinct().collect()]
-            src = spark.read.schema(GRID_STREAM_SCHEMA).parquet(landing_dir).filter(
+            src = spark.read.schema(GRID_SCHEMA).parquet(landing_dir).filter(
                 F.col("time").isin(dates)
             )
         else:

@@ -46,6 +46,30 @@ def test_cli_gridmet_end_to_end(spark, fixdir, tmp_path):
     assert sidecar["Conventions"] == "CF-1.8"
 
 
+def test_cli_gridmet_fill_missing_writes_fill_map(spark, fixdir, tmp_path):
+    """gridmet-etl --fill-missing persists the nearest-donor map beside the
+    output (K3, helper.py:75-77), as cfsv2-etl does: the weight-less
+    features 46-50 each get a donor."""
+    rc = main(
+        [
+            "gridmet-etl",
+            "--grid", os.path.join(fixdir, "grid.parquet"),
+            "--weights", os.path.join(fixdir, "weights.parquet"),
+            "--features", os.path.join(fixdir, "features.parquet"),
+            "--start-date", "1980-01-01",
+            "--end-date", "1980-01-07",
+            "--partial",
+            "--fill-missing",
+            "--out", str(tmp_path),
+        ]
+    )
+    assert rc == 0
+    fmap = pd.read_csv(tmp_path / "fill_map.csv")
+    assert list(fmap.columns) == ["missing_id", "donor_id", "distance"]
+    assert {46, 47, 48, 49, 50} <= set(fmap["missing_id"])
+    assert fmap["donor_id"].notna().all()
+
+
 def test_cli_cfsv2_method2_partitioned(spark, fixdir, tmp_path):
     rc = main(
         [

@@ -12,7 +12,6 @@ from gridmet_etl_spark.operators.fill import (
     fill_missing,
     missingness_split,
     nearest_donor,
-    nearest_donor_bucketed,
     scatter_fill,
 )
 from gridmet_etl_spark.operators.weighted_agg import weighted_mean
@@ -41,7 +40,7 @@ def test_missingness_split(spark, output_long, features):
     assert missing.count() + present.count() == features.count()
 
 
-@pytest.mark.parametrize("fn", [nearest_donor, nearest_donor_bucketed])
+@pytest.mark.parametrize("fn", [nearest_donor])
 def test_nearest_matches_bruteforce(spark, output_long, features, fn):
     missing, present = missingness_split(output_long, features)
     res = {r.missing_id: (r.donor_id, r.distance) for r in fn(missing, present).collect()}

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from gridmet_etl_spark.operators.fill import fill_missing
 from gridmet_etl_spark.plans.cfsv2 import cfsv2_ensemble_pipeline, cfsv2_median_pipeline
 from gridmet_etl_spark.plans.gridmet import gridmet_pipeline
 from gridmet_etl_spark.schemas import FEATURES_SCHEMA, GRID_SCHEMA, WEIGHTS_SCHEMA
@@ -152,6 +153,26 @@ def test_pipeline_build_runs_no_spark_job(
         gridmet_pipeline(grid, weights, features, partial=True)
         cfsv2_median_pipeline(grid_ens, weights_ens, elevation, features)
         cfsv2_ensemble_pipeline(grid_ens, weights_ens, elevation, features)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_filled_pipeline_build_runs_no_spark_job(
+    spark, grid, weights, grid_ens, weights_ens, elevation, features
+):
+    """The fill is lazy too: the first timestep is a semi-join against
+    min(time), not a driver collect, and an empty missing set needs no
+    isEmpty() probe, so building a filled pipeline runs no job."""
+    sc = spark.sparkContext
+    group = "test_filled_pipeline_build_runs_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        gm = gridmet_pipeline(grid, weights, features, partial=True, fill=True)
+        cfsv2_median_pipeline(grid_ens, weights_ens, elevation, features, fill=True)
+        cfsv2_ensemble_pipeline(grid_ens, weights_ens, elevation, features, fill=True)
+        fill_missing(gm, features)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
