@@ -109,9 +109,15 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{'FRESH' if fresh else 'STALE'} {ds}")
         return 0 if all(status.values()) else 1
 
-    if args.command in ("gridmet-etl", "cfsv2-etl") and args.fill_missing and not args.features:
-        print("--fill-missing requires --features", file=sys.stderr)
-        return 2
+    if args.command in ("gridmet-etl", "cfsv2-etl"):
+        if args.fill_missing and not args.features:
+            print("--fill-missing requires --features", file=sys.stderr)
+            return 2
+        # the pipelines filter time only when both bounds are set, so one
+        # bound alone would silently process every landed day
+        if (args.start_date is None) != (args.end_date is None):
+            print("--start-date and --end-date must be given together", file=sys.stderr)
+            return 2
 
     from .operators.fill import fill_missing
     from .session import get_spark

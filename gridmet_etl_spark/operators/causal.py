@@ -11,8 +11,7 @@ partial-agg groupBy.
 
 Float discipline: moment sums are double partial-aggregates (summation
 order varies by partitioning), so every released statistic is
-ROUND(x, ndigits) with the stability-watchlist harness
-(tools/stability_check.py) pinning cross-config agreement — the
+ROUND(x, ndigits) so runs under different partitionings agree — the
 corr_matrix/ridge_regression convention.
 """
 

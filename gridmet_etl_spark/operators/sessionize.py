@@ -1,7 +1,8 @@
 """Gap-based batch sessionization with a hub-key segment-and-merge path.
 
-The lag-window formulation (contract.py::q_sessionize_batch, the batch twin
-of streaming/events.py::sessionize — reference analogue: the daily-append
+The lag-window formulation (q_sessionize_batch in
+tests/offpath_queries/contract.py, the batch twin of
+streaming/events.py::sessionize — reference analogue: the daily-append
 cycle detection in gridmet-etl's etl.py incremental mode) partitions by the
 session key, so ONE task sorts a key's entire history. For hub keys (a bot
 holding a double-digit share of a 12M-event stream) that is unbounded

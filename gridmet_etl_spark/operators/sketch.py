@@ -101,7 +101,7 @@ def cms_estimate(
 # DataSketches HLL_4 implementation (JVM-side, codegen-friendly); the
 # estimate is engine-specific, so contract queries pair it with the exact
 # twin and hash the exact value + a within-tolerance boolean
-# (the approx_aggs pattern in contract.py).
+# (the approx_aggs pattern in tests/offpath_queries/contract.py).
 
 HLL_LG_K = 12
 
@@ -359,9 +359,9 @@ def mg_fold(
     key, and any key whose true count exceeds ``deducted`` is guaranteed
     present (the frequent-items guarantee). ``est_hi = est + deducted``.
 
-    The fold is the BATCH twin of ``streaming.heavy_hitters``: identical
-    merges in slice order, so stream == batch when micro-batches match the
-    slices (pytest-pinned)."""
+    Merges run in slice order, so the summary depends only on the slice
+    sequence: feeding the same slices one at a time (e.g. one per
+    micro-batch) gives the same result."""
     summary: DataFrame | None = None
     deds = []
     totals = []
@@ -424,8 +424,7 @@ def kmv_build(
     Spark's WindowGroupLimit rewrite: per-partition bounded-k heaps on the
     map side, a k-row merge per group on the reduce side. State is ≤ k
     rows per group forever, and two sketches merge by union + re-rank
-    (order-insensitive, replay-idempotent) — the property the streaming
-    twin (streaming/kmv_stream.py) leans on."""
+    (order-insensitive, replay-idempotent)."""
     from pyspark.sql.window import Window
 
     dist = rel.select(

@@ -24,12 +24,6 @@ RAG_WINDOW = 64
 RAG_STRIDE = 64  # non-overlapping index chunks
 
 
-def rag_index(docs: DataFrame, dims: int = EMBED_DIMS) -> DataFrame:
-    """Chunk the corpus and embed each chunk: (doc_id, chunk_id, e0.., nrm2)."""
-    chunks = chunk_windows(docs, window=RAG_WINDOW, stride=RAG_STRIDE)
-    return hash_embed(chunks, ["doc_id", "chunk_id"], text_col="chunk_text", dims=dims)
-
-
 def rag_retrieve(
     spark: SparkSession,
     docs: DataFrame,

@@ -98,15 +98,6 @@ ELEVATION_SCHEMA = T.StructType(
     ]
 )
 
-# Nearest-neighbor fill mapping (helper.py:72-81 persisted CSV schema).
-FILL_MAP_SCHEMA = T.StructType(
-    [
-        T.StructField("missing_id", T.LongType(), False),
-        T.StructField("donor_id", T.LongType(), False),
-        T.StructField("distance", T.DoubleType(), False),
-    ]
-)
-
 # Variable metadata registry: the engine's replacement for xarray/CF
 # attributes + pint units (SURVEY §1.4). Keyed by short output name.
 GRIDMET_VARS = {

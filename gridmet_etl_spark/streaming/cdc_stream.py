@@ -133,26 +133,3 @@ def read_current_state(spark, state_dir: str) -> DataFrame:
         .drop("_tomb")
     )
 
-
-def streaming_cdc_apply(
-    change_stream: DataFrame,
-    state_dir: str,
-    key_cols: Sequence[str],
-    val_cols: Sequence[str],
-    checkpoint: str,
-    seq_col: str = "seq",
-    op_col: str = "op",
-):
-    """Wire a change-row stream into the continuously-upserted snapshot.
-    Returns the started StreamingQuery; read the current table any time
-    with ``read_current_state``."""
-    os.makedirs(state_dir, exist_ok=True)
-    return (
-        change_stream.writeStream.foreachBatch(
-            lambda df, bid: apply_cdc_batch(
-                df, bid, state_dir, key_cols, val_cols, seq_col, op_col
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

@@ -70,6 +70,28 @@ def test_cli_gridmet_fill_missing_writes_fill_map(spark, fixdir, tmp_path):
     assert fmap["donor_id"].notna().all()
 
 
+@pytest.mark.parametrize(
+    "command, inputs, bound",
+    [
+        ("gridmet-etl", ["--grid", "grid.parquet", "--weights", "weights.parquet"],
+         ["--start-date", "1980-01-01"]),
+        ("cfsv2-etl", ["--grid-ens", "grid_ens.parquet", "--weights", "weights_ens.parquet",
+                       "--elevation", "elevation.parquet"],
+         ["--end-date", "1980-01-07"]),
+    ],
+)
+def test_cli_one_sided_date_range_exits_2(fixdir, tmp_path, capsys, command, inputs, bound):
+    """One date bound alone is rejected before any work: the pipelines
+    filter time only when both are given, so it would silently process
+    every landed day."""
+    args = [a if a.startswith("--") else os.path.join(fixdir, a) for a in inputs]
+    out = tmp_path / "out"
+    rc = main([command, *args, *bound, "--out", str(out)])
+    assert rc == 2
+    assert "--start-date and --end-date must be given together" in capsys.readouterr().err
+    assert not out.exists()
+
+
 def test_cli_cfsv2_method2_partitioned(spark, fixdir, tmp_path):
     rc = main(
         [

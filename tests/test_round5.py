@@ -154,77 +154,6 @@ def test_mixture_weights_size_col(spark):
 
 
 # ---------------------------------------------------------------------------
-# streaming line dedup
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_line_dedup_matches_batch(spark, tmp_path):
-    """Docs arriving in doc_id order across micro-batches must reassemble
-    exactly as the batch line_dedup of the union (first-arrived ==
-    first-(doc_id, line_no)); a re-drain changes nothing (idempotence)."""
-    from pyspark.sql import types as T
-
-    from gridmet_etl_spark.operators.dedup import line_dedup, split_lines
-    from gridmet_etl_spark.streaming.line_stream import incremental_line_dedup
-
-    rows1 = [
-        (1, "alpha\nshared boilerplate\nbeta"),
-        (2, "shared boilerplate\ngamma"),
-    ]
-    rows2 = [
-        (3, "shared boilerplate\ndelta\ngamma"),  # both lines dups of batch 1
-        (4, "epsilon\nepsilon"),  # within-doc dup in a later batch
-    ]
-    landing = str(tmp_path / "landing")
-    for rows in (rows1, rows2):
-        spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    out, seen, ck = (
-        str(tmp_path / "out"),
-        str(tmp_path / "seen"),
-        str(tmp_path / "ck"),
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    q = incremental_line_dedup(stream, out, seen, ck)
-    q.awaitTermination()
-
-    got = {
-        r.doc_id: (r.n_lines, r.n_kept, r.text)
-        for r in spark.read.parquet(out).collect()
-    }
-    batch_docs = spark.createDataFrame(rows1 + rows2, ["doc_id", "text"])
-    want = {
-        r.doc_id: (r.n_lines, r.n_kept, r.text)
-        for r in line_dedup(split_lines(batch_docs)).collect()
-    }
-    assert got == want
-    assert got[3] == (3, 1, "delta")
-    assert got[4] == (2, 1, "epsilon")
-
-    # re-drain: no new files → no new batches, output unchanged
-    q2 = incremental_line_dedup(
-        spark.readStream.schema(schema).parquet(landing), out, seen, ck
-    )
-    q2.awaitTermination()
-    assert {
-        r.doc_id: (r.n_lines, r.n_kept, r.text)
-        for r in spark.read.parquet(out).collect()
-    } == want
-
-
-# ---------------------------------------------------------------------------
 # corpus_pipeline_v3
 # ---------------------------------------------------------------------------
 

@@ -321,7 +321,7 @@ def test_layout_advisor_picks_workload_matching_key(spark):
 
 
 # ---------------------------------------------------------------------------
-# Misra-Gries heavy hitters (batch fold + streaming twin)
+# Misra-Gries heavy hitters (batch fold)
 # ---------------------------------------------------------------------------
 
 
@@ -355,58 +355,3 @@ def test_mg_fold_guarantees_and_exact_at_capacity(spark):
     exact = mg_fold(slices, "k", capacity=64).collect()
     assert {r.key: r.est for r in exact} == true
     assert exact[0].deducted == 0
-
-
-def test_streaming_heavy_hitters_matches_fold(spark, tmp_path):
-    """Micro-batches matching the fold slices → identical summary; a
-    re-drain with no new files changes nothing (idempotent state)."""
-    from pyspark.sql import types as T
-
-    from gridmet_etl_spark.operators.sketch import mg_fold
-    from gridmet_etl_spark.streaming.heavy_hitters import (
-        read_heavy_hitters,
-        streaming_heavy_hitters,
-    )
-
-    batches = [
-        [(1,), (1,), (1,), (2,), (2,), (3,)],
-        [(1,), (4,), (4,), (4,), (5,), (6,)],
-        [(7,), (7,), (1,), (2,), (8,), (9,)],
-    ]
-    landing = str(tmp_path / "landing")
-    for rows in batches:
-        spark.createDataFrame(rows, ["user_id"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    schema = T.StructType([T.StructField("user_id", T.LongType())])
-    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    q = streaming_heavy_hitters(stream, state, ck, "user_id", capacity=4)
-    q.awaitTermination()
-
-    got = {
-        r.key: (r.est, r.est_hi, r.n_total, r.deducted)
-        for r in read_heavy_hitters(spark, state).collect()
-    }
-    slices = [
-        spark.createDataFrame(rows, ["user_id"]) for rows in batches
-    ]
-    want = {
-        r.key: (r.est, r.est_hi, r.n_total, r.deducted)
-        for r in mg_fold(slices, "user_id", capacity=4).collect()
-    }
-    assert got == want and len(got) > 0
-
-    q2 = streaming_heavy_hitters(
-        spark.readStream.schema(schema).parquet(landing), state, ck, "user_id", capacity=4
-    )
-    q2.awaitTermination()
-    got2 = {
-        r.key: (r.est, r.est_hi, r.n_total, r.deducted)
-        for r in read_heavy_hitters(spark, state).collect()
-    }
-    assert got2 == want

@@ -1,5 +1,5 @@
 """Round-5 session-C operator tests: KMV theta sketches (exact-small-set
-path, estimator accuracy, merge invariance, set algebra, streaming twin),
+path, estimator accuracy, merge invariance, set algebra),
 and the later session-C additions (RRF fusion, link prediction, causal
 batch, session paths, Hilbert layout) as they land."""
 
@@ -98,60 +98,6 @@ def test_kmv_set_ops_estimator_reasonable(spark):
     # deterministic fixture (estimating |A∩B|/max, not J) — keep the band
     # tight enough to refute it; the corrected estimator yields ~0.332.
     assert abs(r.jaccard_est - 2000 / 6000) < 0.06
-
-
-def test_streaming_kmv_matches_batch_build(spark, tmp_path):
-    """Stream-drained sketch == batch kmv_build over the concatenated
-    batches (exact equality — KMV merge is order-insensitive), and a
-    re-drain with a fresh checkpoint is byte-idempotent."""
-    from pyspark.sql import types as T
-
-    from gridmet_etl_spark.operators.sketch import kmv_build
-    from gridmet_etl_spark.streaming.kmv_stream import (
-        read_kmv_sketch,
-        streaming_kmv,
-    )
-
-    batches = [
-        [("a", i) for i in range(0, 40)] + [("b", i) for i in range(0, 15)],
-        [("a", i) for i in range(30, 80)] + [("b", i) for i in range(10, 20)],
-        [("a", i) for i in range(75, 120)],
-    ]
-    landing = str(tmp_path / "landing")
-    for rows in batches:
-        spark.createDataFrame(rows, ["g", "k"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    schema = T.StructType(
-        [T.StructField("g", T.StringType()), T.StructField("k", T.LongType())]
-    )
-    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    q = streaming_kmv(stream, state, ck, "k", ["g"], k=32)
-    q.awaitTermination()
-
-    got = sorted(map(tuple, read_kmv_sketch(spark, state).collect()))
-    all_rows = [r for rows in batches for r in rows]
-    want = sorted(
-        map(tuple, kmv_build(spark.createDataFrame(all_rows, ["g", "k"]), "k", ["g"], k=32).collect())
-    )
-    assert got == want and len(got) > 0
-
-    q2 = streaming_kmv(
-        spark.readStream.schema(schema).parquet(landing),
-        state,
-        str(tmp_path / "ck2"),
-        "k",
-        ["g"],
-        k=32,
-    )
-    q2.awaitTermination()
-    got2 = sorted(map(tuple, read_kmv_sketch(spark, state).collect()))
-    assert got2 == want
 
 
 # ---------------------------------------------------------------------------

@@ -230,67 +230,6 @@ def test_cohen_kappa_hand_cases(spark):
     r3 = cohen_kappa(spark.createDataFrame(rows, ["a", "b"]), "a", "b").first()
     assert (r3.n, r3.n_agree) == (50, 35)
     assert (r3.po, r3.pe, r3.kappa) == (0.7, 0.5, 0.4)
-def test_streaming_leakage_gate_matches_batch(spark, tmp_path):
-    """Stream verdicts == the batch operator's per-doc contamination on
-    the same eval docs, across multi-file micro-batches; replay with a
-    fresh checkpoint is byte-idempotent per batch partition."""
-    from pyspark.sql import types as T
-
-    from gridmet_etl_spark.operators.decontam import cross_split_leakage
-    from gridmet_etl_spark.streaming.leakage_stream import (
-        streaming_leakage_gate,
-        train_digests,
-    )
-
-    w8 = lambda *words: " ".join(  # noqa: E731
-        tok for w in words for tok in [w] * 8
-    )
-    train = spark.createDataFrame(
-        [(1, w8("alpha") + " " + w8("beta")), (2, w8("gamma"))],
-        ["doc_id", "text"],
-    )
-    eval_rows = [
-        (10, w8("alpha") + " " + w8("zzz")),   # 1 of 2 digests leaked
-        (11, w8("fresh") + " " + w8("words")), # clean
-        (12, w8("gamma")),                     # fully leaked
-    ]
-    landing = str(tmp_path / "landing")
-    for i, row in enumerate(eval_rows):
-        spark.createDataFrame([row], ["doc_id", "text"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    td = train_digests(train)
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    q = streaming_leakage_gate(stream, td, out, ck)
-    q.awaitTermination()
-    got = {
-        r.doc_id: (r.n_digests, r.n_hits, r.contaminated)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got[10] == (2, 1, True)
-    assert got[11] == (2, 0, False)
-    assert got[12] == (1, 1, True)
-    # parity with the batch report's doc-level notion of contamination
-    from gridmet_etl_spark.streaming.leakage_stream import _line_digests
-
-    both = train.selectExpr("'train' AS split", "doc_id", "text").unionByName(
-        spark.createDataFrame(eval_rows, ["doc_id", "text"]).selectExpr(
-            "'eval' AS split", "doc_id", "text"
-        )
-    )
-    dig = _line_digests(both, "text", "doc_id", 8).join(
-        both.select(F.col("doc_id").alias("_id"), "split").distinct(), "_id"
-    ).select("split", F.col("_id").alias("doc_id"), "d")
-    rep = cross_split_leakage(dig).first()
-    assert rep.n_contaminated_docs == sum(1 for v in got.values() if v[2])
 
 
 def test_group_kfold_no_group_straddles(spark):

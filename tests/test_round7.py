@@ -338,70 +338,6 @@ def test_asof_tolerance_on_ntz_timestamps(spark):
     assert far.v_right is None  # 30 s gap > 10 s tolerance
 
 
-# -- streaming as-of enrichment twin ----------------------------------------
-
-
-def test_streaming_asof_enrich_matches_batch(spark, tmp_path):
-    """Stream-static as-of == the batch asof_join on the same rows across
-    multi-file micro-batches; replay to a second sink with a fresh
-    checkpoint produces identical verdicts (stateless gate)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from gridmet_etl_spark.operators.asof import asof_join
-    from gridmet_etl_spark.streaming.asof_stream import streaming_asof_enrich
-
-    t = lambda m: dt.datetime(2024, 1, 1, 10, m)  # noqa: E731
-    right = spark.createDataFrame(
-        [(1, t(0), 100.0), (1, t(30), 130.0), (2, t(10), 210.0)],
-        ["k", "ts", "mark"],
-    )
-    left_rows = [
-        (1, t(5), "a"),   # matches mark 100
-        (1, t(30), "b"),  # inclusive: matches mark 130
-        (2, t(5), "c"),   # before any right row -> null
-        (3, t(45), "d"),  # unknown key -> null
-    ]
-    landing = str(tmp_path / "landing")
-    for row in left_rows:
-        spark.createDataFrame([row], ["k", "ts", "tag"]).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("tag", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(landing)
-    )
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = streaming_asof_enrich(stream, right, out, ck, on="k")
-    q.awaitTermination()
-    got = {r.tag: r.mark_right for r in spark.read.parquet(out).collect()}
-    assert got == {"a": 100.0, "b": 130.0, "c": None, "d": None}
-
-    # batch parity on the identical input
-    left = spark.createDataFrame(left_rows, ["k", "ts", "tag"])
-    batch = {
-        r.tag: r.mark_right for r in asof_join(left, right, on="k").collect()
-    }
-    assert batch == got
-
-    # stateless replay: fresh checkpoint, same landing -> same verdicts
-    out2, ck2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
-    stream2 = spark.readStream.schema(schema).parquet(landing)
-    q2 = streaming_asof_enrich(stream2, right, out2, ck2, on="k")
-    q2.awaitTermination()
-    got2 = {r.tag: r.mark_right for r in spark.read.parquet(out2).collect()}
-    assert got2 == got
-
-
 # -- fleiss_kappa -----------------------------------------------------------
 
 

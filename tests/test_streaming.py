@@ -170,50 +170,6 @@ def test_incremental_append_idempotent(spark, events_dir, tmp_path):
     assert spark.read.parquet(out).count() == n1
 
 
-def test_streaming_corpus_matches_batch_pipeline(spark, tmp_path):
-    """Multi-batch document arrival (cross-batch duplicate + contaminated
-    doc forced into separate micro-batches) must admit exactly the docs the
-    batch corpus_pipeline admits, with identical splits."""
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline
-    from gridmet_etl_spark.streaming.corpus_stream import (
-        benchmark_fingerprints,
-        incremental_corpus,
-        stream_documents,
-    )
-
-    landing = str(tmp_path / "landing")
-    rows1 = [(i, f"streaming doc {i} payload") for i in range(10)]
-    rows2 = [(20, "streaming doc 3 payload"),  # cross-batch dup of doc 3
-             (21, "the eval holdout passage"),  # contaminated
-             (22, "fresh unique document")]
-    spark.createDataFrame(rows1, ["doc_id", "text"]).coalesce(1).write.mode("append").parquet(landing)
-    spark.createDataFrame(rows2, ["doc_id", "text"]).coalesce(1).write.mode("append").parquet(landing)
-    bench = spark.createDataFrame([(900, "THE EVAL holdout passage")], ["doc_id", "text"])
-
-    manifest = str(tmp_path / "manifest")
-    seen = str(tmp_path / "seen")
-    ck = str(tmp_path / "ck")
-    q = incremental_corpus(
-        stream_documents(spark, landing, max_files_per_trigger=1),
-        benchmark_fingerprints(bench),
-        manifest, seen, ck,
-    )
-    q.awaitTermination()
-
-    got = {r.doc_id: r.split for r in spark.read.parquet(manifest).collect()}
-    assert 20 not in got and 21 not in got and 22 in got and 3 in got
-    # batch pipeline on the union agrees on membership and splits
-    all_docs = spark.createDataFrame(rows1 + rows2, ["doc_id", "text"])
-    batch = {r.doc_id: r.split for r in corpus_pipeline(all_docs, bench).collect()}
-    assert got == batch
-    # re-drain: nothing new → manifest unchanged
-    q2 = incremental_corpus(
-        stream_documents(spark, landing), benchmark_fingerprints(bench), manifest, seen, ck
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(manifest).count() == len(got)
-
-
 def test_stream_stream_attribution_matches_batch(spark, tmp_path):
     """Watermarked stream-stream join (view→click within 10 min) must emit
     exactly the batch twin's pairs after an AvailableNow drain."""
@@ -464,48 +420,6 @@ def test_streaming_quota_matches_batch(spark, tmp_path):
             kept_tokens[src] = max(kept_tokens.get(src, 0), cum)
     assert all(v <= budget for v in kept_tokens.values())
     assert any(not kept for (_, _, kept) in got.values())
-
-
-def test_incremental_neardup_matches_batch_lsh(spark, tmp_path):
-    """Streaming MinHash near-dup (band-key state across micro-batches):
-    with state='all', flagged docs == docs the BATCH operator pairs with a
-    lower-id partner, regardless of the batch split."""
-    from gridmet_etl_spark.operators.dedup import minhash_lsh_candidates
-    from gridmet_etl_spark.streaming.neardup_stream import incremental_neardup
-
-    docs = (
-        spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-        .filter(F.col("doc_id") < 200)
-        .select("doc_id", "text")
-    )
-    # batch truth: a doc is a near-dup iff some lower-id doc shares a band
-    pairs = minhash_lsh_candidates(docs, hash_fn="xxhash64")
-    batch_dups = {r.doc_b for r in pairs.select("doc_b").distinct().collect()}
-
-    # stream in two arrival waves (files picked up in separate micro-batches)
-    src = str(tmp_path / "landing")
-    docs.filter(F.col("doc_id") < 100).write.parquet(src + "/w1")
-    docs.filter(F.col("doc_id") >= 100).write.parquet(src + "/w2")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    q = incremental_neardup(
-        stream,
-        flags_dir=str(tmp_path / "flags"),
-        bands_dir=str(tmp_path / "bands"),
-        checkpoint=str(tmp_path / "ck"),
-    )
-    q.awaitTermination(180)
-    flags = {
-        r.doc_id: r.is_neardup
-        for r in spark.read.parquet(str(tmp_path / "flags")).collect()
-    }
-    assert len(flags) == 200
-    got_dups = {d for d, f in flags.items() if f}
-    assert got_dups == batch_dups
-    assert len(got_dups) > 0  # fixture corpus does contain near-dups
 
 
 def test_streaming_quota_state_across_batches(spark, tmp_path):
