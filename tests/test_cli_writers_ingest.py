@@ -413,10 +413,18 @@ def _parse_golden_header(path):
 @pytest.mark.parametrize(
     "golden,calendar,vars_checked",
     [
-        ("/root/reference/gm_header.md", "proleptic_gregorian",
-         ["tmax", "tmin", "prcp", "rhmax", "rhmin", "ws", "humidity"]),
-        ("/root/reference/cfsv2_median_header.md", "julian",
-         ["tmax", "tmin", "prcp"]),
+        pytest.param(
+            "/root/reference/gm_header.md", "proleptic_gregorian",
+            ["tmax", "tmin", "prcp", "rhmax", "rhmin", "ws", "humidity"],
+            marks=pytest.mark.skipif(
+                not os.path.exists("/root/reference/gm_header.md"),
+                reason="reference data not mounted")),
+        pytest.param(
+            "/root/reference/cfsv2_median_header.md", "julian",
+            ["tmax", "tmin", "prcp"],
+            marks=pytest.mark.skipif(
+                not os.path.exists("/root/reference/cfsv2_median_header.md"),
+                reason="reference data not mounted")),
     ],
 )
 def test_sidecar_matches_golden_header(spark, tmp_path, golden, calendar, vars_checked):

@@ -14,12 +14,25 @@ loop: it scans the package source for the pattern and asserts the per-file
 site count matches the classified whitelist below. A new site anywhere
 (including in a file not listed here) fails the suite until it is
 classified in docs/SCALE.md AND added here with its bound.
+
+Only call sites count: ``#`` comments are dropped (stdlib ``tokenize``)
+before matching, so a comment that names ``max_by`` is not a site, while
+string tokens are kept, so a SQL-string site such as
+``F.expr("max_by(a, b)")`` still is.
+
+Known blind spot: the pattern sees only the inline ``F.max(F.struct(...``
+form. A struct bound to a name first and aggregated later is not matched:
+the classified obv_trend site ``F.max(pick)`` in operators/risk.py
+(``pick`` is a struct) is listed in docs/SCALE.md but not here, which is
+why the docs count 11 sites and this whitelist 10.
 """
 
 from __future__ import annotations
 
+import io
 import os
 import re
+import tokenize
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "gridmet_etl_spark")
@@ -37,8 +50,6 @@ CLASSIFIED = {
     # whitelisted with written bounds (SCALE.md census section):
     "operators/cluster.py": 1,      # dbscan border assign — eps-ball-bounded
     "operators/scd.py": 1,          # scd2 latest-per-key — delta-bounded
-    "operators/asof.py": 2,         # bucket summary — relation already
-                                    # window-sorted in-bucket (bench whitelist)
     "operators/sketch.py": 1,       # hist_quantiles bin pick — |bins|-bounded
     "operators/planner.py": 1,      # layout pick — 9-row window relation
 }
@@ -46,6 +57,12 @@ CLASSIFIED = {
 PATTERN = re.compile(
     r"(?:\bmin_by\s*\(|\bmax_by\s*\(|F\.(?:min|max)\(\s*F\.struct)"
 )
+
+
+def _code_only(src: str) -> str:
+    """``src`` with its ``#`` comment tokens removed; strings are kept."""
+    toks = tokenize.generate_tokens(io.StringIO(src).readline)
+    return tokenize.untokenize(t for t in toks if t.type != tokenize.COMMENT)
 
 
 def scan() -> dict[str, int]:
@@ -59,7 +76,7 @@ def scan() -> dict[str, int]:
             path = os.path.join(root, f)
             rel = os.path.relpath(path, PKG).replace(os.sep, "/")
             with open(path, encoding="utf-8") as fh:
-                n = len(PATTERN.findall(fh.read()))
+                n = len(PATTERN.findall(_code_only(fh.read())))
             if n:
                 found[rel] = n
     return found
