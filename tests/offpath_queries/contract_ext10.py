@@ -817,6 +817,8 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_markov() -> str:
+    # probs is MATERIALIZED: every value-iteration CTE joins it, and
+    # DuckDB would otherwise re-run the sessionizing windows for each one.
     trans = """
 flagged AS (
   SELECT user_id, ts, event_id, event_type,
@@ -854,7 +856,7 @@ trans AS (
   FROM (SELECT * FROM body UNION ALL SELECT * FROM firsts) _u
   GROUP BY s_from, s_to),
 rowsum AS (SELECT s_from, sum(n) AS n_out FROM trans GROUP BY s_from),
-probs AS (
+probs AS MATERIALIZED (
   SELECT t.s_from, t.s_to, t.n / CAST(r.n_out AS DOUBLE) AS prob
   FROM trans t JOIN rowsum r USING (s_from))"""
 

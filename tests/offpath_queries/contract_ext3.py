@@ -36,25 +36,28 @@ def _sql_bpe_merges(k: int = _BPE_K) -> str:
     adjacent sentinel-wrapped symbol pairs weighted by word frequency,
     take the (count DESC, l, r) argmax, apply it with a literal replace
     (ANSI replace is left-to-right non-overlapping — identical greedy
-    semantics to the Spark side)."""
+    semantics to the Spark side). The round CTEs are MATERIALIZED: each
+    s{i} feeds both p{i+1} and s{i+1}, so DuckDB's inlining would re-derive
+    every earlier round twice per round (2^k scans of the corpus)."""
     parts = [
         r"""WITH words AS (
   SELECT w, count(*) AS freq FROM (
     SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents
   ) WHERE regexp_matches(w, '^[a-z]+$') GROUP BY w
 ),
-s0 AS (SELECT regexp_replace(w, '(.)', '<\1>', 'g') AS s, freq FROM words)"""
+s0 AS MATERIALIZED (
+  SELECT regexp_replace(w, '(.)', '<\1>', 'g') AS s, freq FROM words)"""
     ]
     for i in range(1, k + 1):
         parts.append(
-            f"""p{i} AS (
+            f"""p{i} AS MATERIALIZED (
   SELECT a[j] AS l, a[j+1] AS r, CAST(sum(freq) AS BIGINT) AS c
   FROM (SELECT string_split(s[2:-2], '><') AS a, freq FROM s{i - 1}),
        LATERAL (SELECT unnest(range(1, len(a))) AS j)
   GROUP BY l, r
 ),
-b{i} AS (SELECT l, r, c FROM p{i} ORDER BY c DESC, l, r LIMIT 1),
-s{i} AS (SELECT replace(s,
+b{i} AS MATERIALIZED (SELECT l, r, c FROM p{i} ORDER BY c DESC, l, r LIMIT 1),
+s{i} AS MATERIALIZED (SELECT replace(s,
            (SELECT '<' || l || '><' || r || '>' FROM b{i}),
            (SELECT '<' || l || r || '>' FROM b{i})) AS s, freq FROM s{i - 1})"""
         )

@@ -191,6 +191,9 @@ def q_corpus_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_corpus_v3() -> str:
+    # lines, uniq, bands and edges are MATERIALIZED: each is read more than
+    # once, and edges once per step of the recursive reach, which would
+    # otherwise re-run the whole MinHash chain on every step.
     from .contract_ext import NORM
     from gridmet_etl_spark.operators.sampling import HASH_BUCKETS, sql_hash_bucket
 
@@ -206,7 +209,7 @@ lstarts AS (
   -- in this DuckDB build; a fixed cap would diverge on long documents)
   SELECT doc_id, a, unnest(generate_series(1, len(a), {_LINE_W})) AS st
   FROM base),
-lines AS (
+lines AS MATERIALIZED (
   SELECT doc_id, CAST((st - 1) / {_LINE_W} AS INT) AS line_no,
          array_to_string(a[st : st + {_LINE_W - 1}], ' ') AS line
   FROM lstarts),
@@ -229,7 +232,7 @@ ld AS (
     FROM kept GROUP BY doc_id) a ON a.doc_id = t.doc_id),
 gated AS (
   SELECT * FROM ld WHERE n_kept > 0 AND n_kept * 4 >= n_lines * 1),
-uniq AS (
+uniq AS MATERIALIZED (
   SELECT doc_id, n_lines, n_kept, text FROM (
     SELECT *, row_number() OVER (
       PARTITION BY md5(lower(text)) ORDER BY doc_id) AS rn
@@ -244,7 +247,7 @@ sigs AS (
   SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || ':' || sh)) AS mh
   FROM sh3, generate_series(0, {N_MINHASH_SEEDS - 1}) s(seed)
   GROUP BY doc_id, seed),
-bands AS (
+bands AS MATERIALIZED (
   SELECT doc_id, CAST(floor(seed / {ROWS_PER_BAND}) AS INT) AS band,
          md5(string_agg(mh, '|' ORDER BY seed)) AS band_key
   FROM sigs GROUP BY doc_id, CAST(floor(seed / {ROWS_PER_BAND}) AS INT)),
@@ -256,7 +259,7 @@ star AS (
   FROM bands b
   JOIN reps r ON r.band = b.band AND r.band_key = b.band_key
   WHERE r.n > 1 AND b.doc_id <> r.doc_a),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM star
   UNION SELECT doc_b, doc_a FROM star),
 reach AS (

@@ -17,12 +17,15 @@ GRIDMET_SRC = ["tmmx", "tmmn", "pr", "rmax", "rmin", "vs"]
 
 
 def _plan(df) -> str:
-    """Final (post-AQE) executed plan: collect() executes THIS DataFrame's
-    QueryExecution so AdaptiveSparkPlan reports the real physical operators
-    (a write would spawn a separate QueryExecution and leave this one
-    unfinalized)."""
-    df.collect()
-    full = df._jdf.queryExecution().executedPlan().toString()
+    """Final (post-AQE) executed plan: running THIS DataFrame's
+    QueryExecution makes AdaptiveSparkPlan report the real physical
+    operators (a write would spawn a separate QueryExecution and leave this
+    one unfinalized). The rows are counted in the JVM, not collected: the
+    plan is the same, and the stress geometry's millions of output rows are
+    not shipped to Python."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    full = qe.executedPlan().toString()
     # AQE toString prints "== Final Plan ==" followed by "== Initial Plan ==";
     # assertions must only see the final section or exchanges double-count
     return full.split("== Initial Plan ==")[0]
