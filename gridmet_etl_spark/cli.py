@@ -118,6 +118,12 @@ def main(argv: list[str] | None = None) -> int:
         if (args.start_date is None) != (args.end_date is None):
             print("--start-date and --end-date must be given together", file=sys.stderr)
             return 2
+        # a reversed range keeps no day: it would write an empty dataset
+        if args.start_date and datetime.strptime(args.start_date, "%Y-%m-%d") > datetime.strptime(
+            args.end_date, "%Y-%m-%d"
+        ):
+            print("--start-date must not be after --end-date", file=sys.stderr)
+            return 2
 
     from .operators.fill import fill_missing
     from .session import get_spark

@@ -1,8 +1,9 @@
 """Driver-contract query registry: (spark, sf_dir) callables + matching
 DuckDB oracle SQL for the paper's operators (SURVEY §2): the strict and
-masked area-weighted means, the ensemble median, the long→wide pivot, both
-pipelines, the bbox/time prunes, the missing-data fill, the catalog lookup,
-weight QA, humidity physics, the member concat and in-engine polygon weights.
+masked area-weighted means, the ensemble median, the six-variable wide mean,
+both pipelines, the bbox/time prunes, the missing-data fill, the catalog
+lookup, weight QA, humidity physics, the member concat and in-engine
+polygon weights.
 
 Every query reads the reference-shaped domain fixtures under ``fixtures/``
 by absolute path, from both Spark and DuckDB; ``sf_dir`` is unused.
@@ -23,8 +24,7 @@ from .functions.physics import relative_humidity
 from .operators.bbox import bbox_filter, time_filter
 from .operators.ensemble import ensemble_median
 from .operators.fill import missingness_split, nearest_donor
-from .operators.pivot import pivot_wide
-from .operators.weighted_agg import weight_sum_qa, weighted_mean, weighted_mean_all_vars
+from .operators.weighted_agg import weight_sum_qa, weighted_mean_wide
 from .plans.gridmet import gridmet_pipeline
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -67,8 +67,8 @@ def _weights(spark: SparkSession) -> DataFrame:
 
 def q_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1+A1: strict area-weighted mean, tmmx."""
-    out = weighted_mean(_grid(spark).filter(F.col("var") == "tmmx"), _weights(spark))
-    return out.select("feature_id", "time", F.round("value", R).alias("value"))
+    out = weighted_mean_wide(_grid(spark), _weights(spark), ["tmmx"])
+    return out.select("feature_id", "time", F.round("tmmx", R).alias("value"))
 
 
 SQL_WEIGHTED_MEAN = f"""
@@ -83,8 +83,8 @@ GROUP BY w.feature_id, g.time
 
 def q_masked_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: masked weighted mean (--partial), tmmx."""
-    out = weighted_mean(_grid(spark).filter(F.col("var") == "tmmx"), _weights(spark), masked=True)
-    return out.select("feature_id", "time", F.round("value", R).alias("value"))
+    out = weighted_mean_wide(_grid(spark), _weights(spark), ["tmmx"], masked=True)
+    return out.select("feature_id", "time", F.round("tmmx", R).alias("value"))
 
 
 SQL_MASKED_WEIGHTED_MEAN = f"""
@@ -116,13 +116,12 @@ GROUP BY time, i, j
 
 
 def q_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4: long→wide over the 6 gridMET variables after weighted agg."""
-    long_agg = weighted_mean_all_vars(_grid(spark), _weights(spark), masked=True)
-    wide = pivot_wide(long_agg, {v: v for v in ["tmmx", "tmmn", "pr", "rmax", "rmin", "vs"]})
-    return wide.select(
-        "feature_id", "time",
-        *[F.round(v, R).alias(v) for v in ["tmmx", "tmmn", "pr", "rmax", "rmin", "vs"]],
-    )
+    """J4: masked means of the 6 gridMET variables, one column each. The
+    oracle aggregates long form, then pivots: an independent reference for
+    the wide operator."""
+    variables = ["tmmx", "tmmn", "pr", "rmax", "rmin", "vs"]
+    wide = weighted_mean_wide(_grid(spark), _weights(spark), variables, masked=True)
+    return wide.select("feature_id", "time", *[F.round(v, R).alias(v) for v in variables])
 
 
 SQL_PIVOT_WIDE = f"""
@@ -271,12 +270,11 @@ FROM phys
 
 def q_nearest_donor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/O1: nearest-with-data donor per missing feature, with distance."""
-    grid = _grid(spark).filter(F.col("var") == "tmmx")
-    out_long = weighted_mean(grid, _weights(spark), masked=True)
+    out = weighted_mean_wide(_grid(spark), _weights(spark), ["tmmx"], masked=True)
     features = _pq(spark, FX["features"]).select(
         F.col("feature_id").cast("long").alias("feature_id"), "lat", "lon"
     )
-    missing, present = missingness_split(out_long, features)
+    missing, present = missingness_split(out, features)
     nn = nearest_donor(missing, present)
     return nn.select("missing_id", "donor_id", F.round("distance", R).alias("distance"))
 
@@ -564,7 +562,6 @@ def q_polygon_zonal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE Spark DAG (weight generation fuses with the aggregation; the grid
     fact still only shuffles at output size)."""
     from .operators.spatial_weights import cell_coverage_weights
-    from .operators.weighted_agg import weighted_mean
 
     polys = _pq(spark, FX["polygons"])
     grid = _pq(spark, FX["grid"]).where(F.col("var") == "tmmx")
@@ -574,8 +571,8 @@ def q_polygon_zonal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)  # see q_polygon_weights
     )
     w = cell_coverage_weights(cells, polys, cell_size=_PIP_RES, supersample=_PIP_S)
-    out = weighted_mean(grid, w)
-    return out.select("feature_id", "time", F.round("value", R).alias("value"))
+    out = weighted_mean_wide(grid, w, ["tmmx"])
+    return out.select("feature_id", "time", F.round("tmmx", R).alias("value"))
 
 
 SQL_POLYGON_ZONAL_MEAN = f"""

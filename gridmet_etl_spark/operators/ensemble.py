@@ -33,37 +33,6 @@ def ensemble_median(grid_ens: DataFrame) -> DataFrame:
     )
 
 
-def ensemble_stats(grid_ens: DataFrame, value_col: str = "value") -> DataFrame:
-    """Extended ensemble summary (beyond reference surface, same shuffle):
-    median/mean/min/max/stddev per cell, one pass."""
-    v = F.col(value_col)
-    return grid_ens.groupBy("var", "time", "i", "j").agg(
-        F.median(v).alias("ens_median"),
-        F.avg(v).alias("ens_mean"),
-        F.min(v).alias("ens_min"),
-        F.max(v).alias("ens_max"),
-        F.stddev_samp(v).alias("ens_std"),
-        F.count(v).alias("n_members"),
-    )
-
-
-def ensemble_quantiles(
-    grid_ens: DataFrame,
-    quantiles: tuple[float, ...] = (0.1, 0.5, 0.9),
-    value_col: str = "value",
-) -> DataFrame:
-    """Exact interpolated quantiles across the ensemble per cell — the
-    probabilistic-forecast generalization of the reference's median-only
-    product (same shuffle as ensemble_median; linear interpolation matches
-    DuckDB quantile_cont bit-for-bit on the 48-member groups)."""
-    return grid_ens.groupBy("var", "time", "i", "j").agg(
-        *[
-            F.percentile(value_col, F.lit(q)).alias(f"q{int(q * 100)}")
-            for q in quantiles
-        ]
-    )
-
-
 def concat_members(members: list[DataFrame], tag_col: str = "ens") -> DataFrame:
     """E2: xr.concat(dim="ens") analogue — UNION ALL with a member tag.
 

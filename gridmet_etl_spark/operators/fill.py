@@ -33,12 +33,10 @@ def missingness_split(output_long: DataFrame, features: DataFrame) -> tuple[Data
     helper.py:45). Features absent from the output entirely (no weights)
     count as missing — the reference sees those as all-NaN series.
 
-    The probed value is "value" (long form) or the first non-key column
-    (wide form). Returns (missing_features, present_features), both with
-    feature_id/lat/lon.
+    The probed value is the first non-key column. Returns
+    (missing_features, present_features), both with feature_id/lat/lon.
     """
-    non_keys = [c for c in output_long.columns if c not in ("feature_id", "ens", "time")]
-    value_col = "value" if "value" in output_long.columns else non_keys[0]
+    value_col = next(c for c in output_long.columns if c not in ("feature_id", "ens", "time"))
     first_time = output_long.agg(F.min("time").alias("time"))
     first = output_long.join(F.broadcast(first_time), "time", "left_semi")
     present_ids = first.filter(F.col(value_col).isNotNull()).select("feature_id").distinct()

@@ -1,7 +1,11 @@
 """Area-weighted aggregation — the engine core (SURVEY §2.4 J1, §2.5 A1/A2).
 
-Reference semantics (the gdptools ``AggGen`` contract as configured at
-/root/reference/gridmet_etl/etl.py:425-433 and :686-707):
+``weighted_mean_wide`` is the one weighted-mean operator: both pipelines,
+the contract queries and the correctness tests all run it. A single-variable
+mean is the same call with one variable.
+
+Reference semantics (the gdptools ``AggGen`` contract as configured in the
+reference ``gridmet_etl/etl.py:425-433`` and ``:686-707``):
 
 - ``stat_method="mean"`` (A1): per (feature, time), Σ w·v / Σ w over ALL the
   feature's intersecting cells. NaN-intolerant — any missing cell poisons the
@@ -42,11 +46,8 @@ def _is_missing(v: Column, dtype: str) -> Column:
     return v.isNull()
 
 
-def _mean_expr(
-    v: Column, missing: Column, masked: bool, cond: Column | None = None
-) -> Column:
-    """Σ wght·v / Σ wght over the rows where ``cond`` holds (all rows when
-    it is None).
+def _mean_expr(v: Column, missing: Column, masked: bool, cond: Column) -> Column:
+    """Σ wght·v / Σ wght over the rows where ``cond`` holds.
 
     ``masked`` normalizes over non-missing cells only; all-missing → NULL
     (0/0). Otherwise any missing cell poisons the group: the poison is
@@ -54,57 +55,15 @@ def _mean_expr(
     NULL, which it skips; the final projection maps NaN back to NULL)
     instead of a separate count(missing) guard buffer — one less
     aggregation buffer per group in the partial rows crossing the exchange
-    (guide §2.3). A group with no missing cell sums the identical terms in
-    the identical order, so its output is bit-for-bit the guarded plan's
-    (r11).
+    (guide §2.3). A group with no missing cell sums the same terms in the
+    same order as a guarded sum would, so its value is bit-for-bit equal.
     """
     w = F.col("wght")
-
-    def only(x: Column) -> Column:
-        return x if cond is None else F.when(cond, x)
-
     if masked:
-        keep = ~missing if cond is None else cond & ~missing
+        keep = cond & ~missing
         return F.sum(F.when(keep, w * v)) / F.sum(F.when(keep, w))
-    num = F.sum(only(F.when(missing, F.lit(float("nan"))).otherwise(w * v)))
-    return F.when(F.isnan(num), F.lit(None)).otherwise(num) / F.sum(only(w))
-
-
-def weighted_mean(
-    grid: DataFrame,
-    weights: DataFrame,
-    extra_keys: tuple[str, ...] = (),
-    masked: bool = False,
-) -> DataFrame:
-    """grid ⋈ broadcast(weights) on (i, j) → weighted mean per
-    (feature_id, *extra_keys, time).
-
-    Returns columns ``feature_id, *extra_keys, time, value``.
-    ``masked=False`` reproduces stat_method="mean" (NaN poisoning);
-    ``masked=True`` reproduces "masked_mean".
-    """
-    joined = grid.join(F.broadcast(weights), on=["i", "j"], how="inner")
-    keys = ["feature_id", *extra_keys, "time"]
-    missing = _is_missing(F.col("value"), dict(grid.dtypes)["value"])
-    return joined.groupBy(*keys).agg(
-        _mean_expr(F.col("value"), missing, masked).alias("value")
-    )
-
-
-def weighted_mean_all_vars(
-    grid: DataFrame,
-    weights: DataFrame,
-    variables: list[str] | None = None,
-    masked: bool = False,
-) -> DataFrame:
-    """Long-form multi-variable weighted mean: one shuffle computes every
-    variable at once.
-
-    Output: ``feature_id, var, time, value``.
-    """
-    if variables is not None:
-        grid = grid.filter(F.col("var").isin(variables))  # P7 projection
-    return weighted_mean(grid, weights, extra_keys=("var",), masked=masked)
+    num = F.sum(F.when(cond, F.when(missing, F.lit(float("nan"))).otherwise(w * v)))
+    return F.when(F.isnan(num), F.lit(None)).otherwise(num) / F.sum(F.when(cond, w))
 
 
 def weighted_mean_wide(
@@ -114,33 +73,26 @@ def weighted_mean_wide(
     masked: bool = False,
     extra_keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Single-shuffle wide weighted mean: conditional aggregation computes
-    every variable's weighted mean in ONE groupBy((feature_id, *extra_keys,
-    time)) — versus the long-agg→pivot path, which shuffles twice
-    (once on (…, var, time), once on (…, time)).
+    """grid ⋈ broadcast(weights) on (i, j) → weighted mean of every
+    variable in ONE groupBy((feature_id, *extra_keys, time)), by
+    conditional aggregation on ``var``.
 
-    At 100 TB this halves shuffle volume for the pipeline's dominant stage;
-    semantics are identical to ``weighted_mean_all_vars`` + ``pivot_wide``
-    (asserted by tests). Output: (feature_id, *extra_keys, time, <var>...).
+    Output: (feature_id, *extra_keys, time, <var>...), one column per
+    variable. ``masked=False`` reproduces stat_method="mean" (NaN
+    poisoning); ``masked=True`` reproduces "masked_mean". A missing cell of
+    one variable never touches another variable's column. The DuckDB
+    oracle of the ``pivot_wide`` contract query (long aggregation per
+    variable, then pivot) is the independent reference for this operator.
 
-    r11 exchange-narrowing (guide §2.3), output bit-identical:
-
-    - The strict path's missing-poison guard is folded INTO the numerator
-      sum: a missing value contributes NaN (which SQL SUM propagates,
-      unlike NULL, which it skips), and the final projection maps a NaN
-      sum back to NULL. That drops the third aggregation buffer per
-      variable (``count(missing)``) — partial rows shrink from 3 to 2
-      buffers per variable, and on the CFSv2 398M-cell geometry the ONE
-      exchange this operator performs carries ~3M nearly-unreduced groups
-      per map task, so partial-row width IS the shuffle volume.
-      Equivalence: NaN poisons exactly the groups the old guard nulled
-      (any missing value in the group → NaN sum → NULL out; a group whose
-      rows are all non-missing sums the same terms in the same order).
-    - The per-variable ``var == '<name>'`` STRING comparisons (3 per
-      variable per row in the old agg, 12 for CFSv2's 4 vars) collapse to
-      ONE ``array_position`` string probe per row projecting an int code;
-      the aggregate conditions compare that int. The ``isin`` filter
-      stays string-form so parquet predicate pushdown is unaffected.
+    Exchange width (guide §2.3): each variable carries two aggregation
+    buffers, because the strict path folds its missing-poison into the
+    numerator sum (``_mean_expr``) instead of a third count(missing)
+    buffer. On the CFSv2 398M-cell geometry the one exchange carries ~3M
+    nearly-unreduced groups per map task, so partial-row width IS the
+    shuffle volume. Each row's ``var`` is probed once by
+    ``array_position`` into an int code that the aggregate conditions
+    compare, not once per variable as a string. The ``isin`` filter stays
+    string-form so parquet predicate pushdown is unaffected.
     """
     joined = grid.filter(F.col("var").isin(variables)).join(
         F.broadcast(weights), on=["i", "j"], how="inner"

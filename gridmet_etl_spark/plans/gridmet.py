@@ -7,8 +7,9 @@ chain is declared lazily and planned by Catalyst; nothing materializes until
 the caller writes or collects.
 
 Scale notes: grid is the 100 TB fact side → only filters and one broadcast
-join touch it before the single groupBy shuffle; the pivot reuses that
-aggregated (already small: |features| × |days| × |vars|) result.
+join touch it before the single groupBy shuffle, which emits every
+variable's mean as a column; the renames and physics run on that already
+small (|features| × |days|) result.
 
 Spatial prune: the inner broadcast join on (i, j) keeps exactly the cells
 the weights table names, so no bbox step runs before it. A bbox of the
@@ -53,8 +54,7 @@ def gridmet_pipeline(
     if start_date and end_date:
         grid = time_filter(grid, start_date, end_date)  # P3
 
-    # single-shuffle conditional aggregation (supersedes long-agg + pivot:
-    # same semantics, half the shuffles — see weighted_mean_wide docstring)
+    # one shuffle: every variable's mean in one conditional aggregation
     wide = weighted_mean_wide(grid, weights, source_vars, masked=partial)
     rename = {src: short for short, (src, *_rest) in GRIDMET_VARS.items()}
     for src, dst in rename.items():  # P9

@@ -190,7 +190,7 @@ def make_opendap_fetcher(
         # day collapse: sub-daily coordinates (e.g. 6-hourly CFSv2 slices,
         # kept distinct by dap_micro/xarray datetime coords) map onto the
         # same date label, so a cell-day carries one row per timestep.
-        # Downstream weighted_mean groups by (feature, time): each slice
+        # Downstream weighted_mean_wide groups by (feature, time): each slice
         # contributes weight w, so the result is the area-weighted DAILY
         # MEAN of the sub-daily values — the semantics a daily pipeline
         # wants (pinned by test_dap_micro's sub-daily ingest test). The

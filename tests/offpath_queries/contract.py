@@ -1,9 +1,8 @@
 """Off-path queries of the former driver-contract registry that lived in
 ``gridmet_etl_spark/contract.py``: TPC-H shapes over the driver tables at
-``sf_dir``, event/session queries, ensemble spread and quantiles, and the
-grid statistics the two paper pipelines do not use. Each is a (spark,
-sf_dir) callable with matching DuckDB oracle SQL, checked by
-``tests/test_contract.py``.
+``sf_dir``, event/session queries, and the grid statistics the two paper
+pipelines do not use. Each is a (spark, sf_dir) callable with matching
+DuckDB oracle SQL, checked by ``tests/test_contract.py``.
 
 Also the shared helpers the ``contract_ext*`` modules import: ``R``, ``FX``,
 ``FIXDIR`` and ``_pq`` from the package contract, plus ``_t`` for driver
@@ -17,8 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gridmet_etl_spark.contract import FIXDIR, R, _grid, _grid_ens, _pq, _weights  # noqa: F401
-from gridmet_etl_spark.operators.ensemble import ensemble_stats
+from gridmet_etl_spark.contract import FIXDIR, R, _grid, _pq, _weights  # noqa: F401
 
 FX = {
     name: os.path.join(FIXDIR, f"{name}.parquet")
@@ -28,57 +26,6 @@ FX = {
 
 def _t(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
-
-
-def q_ensemble_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sub = _grid_ens(spark).filter((F.col("var") == "sph") & (F.col("i") < 3))
-    out = ensemble_stats(sub)
-    return out.select(
-        "time", "i", "j",
-        F.round("ens_median", R).alias("ens_median"),
-        F.round("ens_mean", R).alias("ens_mean"),
-        F.round("ens_min", R).alias("ens_min"),
-        F.round("ens_max", R).alias("ens_max"),
-        F.round("ens_std", R).alias("ens_std"),
-        F.col("n_members"),
-    )
-
-
-SQL_ENSEMBLE_STATS = f"""
-SELECT time, i, j,
-       ROUND(median(value), {R}) AS ens_median,
-       ROUND(avg(value), {R}) AS ens_mean,
-       ROUND(min(value), {R}) AS ens_min,
-       ROUND(max(value), {R}) AS ens_max,
-       ROUND(stddev_samp(value), {R}) AS ens_std,
-       count(value) AS n_members
-FROM '{FX["grid_ens"]}' WHERE var = 'sph' AND i < 3
-GROUP BY time, i, j
-"""
-
-
-def q_ensemble_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated ensemble quantiles (p10/p50/p90) per cell."""
-    from gridmet_etl_spark.operators.ensemble import ensemble_quantiles
-
-    sub = _grid_ens(spark).filter((F.col("var") == "pr") & (F.col("i") < 4))
-    out = ensemble_quantiles(sub)
-    return out.select(
-        "time", "i", "j",
-        F.round("q10", R).alias("q10"),
-        F.round("q50", R).alias("q50"),
-        F.round("q90", R).alias("q90"),
-    )
-
-
-SQL_ENSEMBLE_QUANTILES = f"""
-SELECT time, i, j,
-       ROUND(quantile_cont(value, 0.1), {R}) AS q10,
-       ROUND(quantile_cont(value, 0.5), {R}) AS q50,
-       ROUND(quantile_cont(value, 0.9), {R}) AS q90
-FROM '{FX["grid_ens"]}' WHERE var = 'pr' AND i < 4
-GROUP BY time, i, j
-"""
 
 
 def q_tpch_weighted_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -260,38 +207,6 @@ SQL_EVENTS_DAILY = """
 SELECT CAST(ts AS DATE) AS day, event_type, count(*) AS n_events,
        ROUND(sum(value), 6) AS sum_value, count(DISTINCT user_id) AS n_users
 FROM events GROUP BY CAST(ts AS DATE), event_type
-"""
-
-
-def q_unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native unpivot (melt): wide weighted-mean output back to long form —
-    row-local, no shuffle beyond the agg itself."""
-    from gridmet_etl_spark.operators.pivot import unpivot_long
-    from gridmet_etl_spark.operators.weighted_agg import weighted_mean_wide
-
-    variables = ["tmmx", "tmmn", "pr"]
-    wide = weighted_mean_wide(_grid(spark), _weights(spark), variables, masked=True)
-    out = unpivot_long(wide, variables)
-    return out.select("feature_id", "time", "var", F.round("value", R).alias("value"))
-
-
-SQL_UNPIVOT_LONG = f"""
-WITH wide AS (
-  SELECT w.feature_id, g.time,
-         sum(CASE WHEN g.var = 'tmmx' AND g.value IS NOT NULL THEN w.wght * g.value END)
-           / sum(CASE WHEN g.var = 'tmmx' AND g.value IS NOT NULL THEN w.wght END) AS tmmx,
-         sum(CASE WHEN g.var = 'tmmn' AND g.value IS NOT NULL THEN w.wght * g.value END)
-           / sum(CASE WHEN g.var = 'tmmn' AND g.value IS NOT NULL THEN w.wght END) AS tmmn,
-         sum(CASE WHEN g.var = 'pr' AND g.value IS NOT NULL THEN w.wght * g.value END)
-           / sum(CASE WHEN g.var = 'pr' AND g.value IS NOT NULL THEN w.wght END) AS pr
-  FROM '{FX["grid"]}' g JOIN '{FX["weights"]}' w ON g.i = w.i AND g.j = w.j
-  WHERE g.var IN ('tmmx', 'tmmn', 'pr')
-  GROUP BY w.feature_id, g.time)
-SELECT feature_id, time, 'tmmx' AS var, ROUND(tmmx, {R}) AS value FROM wide
-UNION ALL
-SELECT feature_id, time, 'tmmn' AS var, ROUND(tmmn, {R}) AS value FROM wide
-UNION ALL
-SELECT feature_id, time, 'pr' AS var, ROUND(pr, {R}) AS value FROM wide
 """
 
 
@@ -1160,15 +1075,12 @@ CONTRACT_QUERIES = {
     "winsorize_grid": (q_winsorize_grid, SQL_WINSORIZE_GRID),
     "gap_fill": (q_gap_fill, SQL_GAP_FILL),
     "jsonl_scan": (q_jsonl_scan, SQL_JSONL_SCAN),
-    "ensemble_stats": (q_ensemble_stats, SQL_ENSEMBLE_STATS),
-    "ensemble_quantiles": (q_ensemble_quantiles, SQL_ENSEMBLE_QUANTILES),
     "tpch_weighted_mean": (q_tpch_weighted_mean, SQL_TPCH_WEIGHTED_MEAN),
     "tpch_q1": (q_tpch_q1, SQL_TPCH_Q1),
     "tpch_semi_anti": (q_tpch_semi_anti, SQL_TPCH_SEMI_ANTI),
     "tpch_window_topk": (q_tpch_window_topk, SQL_TPCH_WINDOW_TOPK),
     "tpch_join3": (q_tpch_join3, SQL_TPCH_JOIN3),
     "events_daily": (q_events_daily, SQL_EVENTS_DAILY),
-    "unpivot_long": (q_unpivot_long, SQL_UNPIVOT_LONG),
     "events_window": (q_events_window, SQL_EVENTS_WINDOW),
     "events_moving_avg": (q_events_moving_avg, SQL_EVENTS_MOVING_AVG),
     "sessionize_batch": (q_sessionize_batch, SQL_SESSIONIZE_BATCH),

@@ -400,17 +400,19 @@ def _sql_semantic_dedup() -> str:
         f"SELECT vec_id, {b} AS band, bucket_{b} AS bucket FROM bucketed"
         for b in range(_SRP_BANDS)
     )
+    # corpus, bucketed, bands, pairs and edges are each read more than
+    # once, so they are MATERIALIZED rather than inlined at every reference
     return f"""
-WITH RECURSIVE corpus AS (
+WITH RECURSIVE corpus AS MATERIALIZED (
   SELECT vec_id, embedding FROM embeddings
   UNION ALL
   SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings WHERE vec_id < 20),
-bucketed AS (
+bucketed AS MATERIALIZED (
   SELECT c.vec_id, any_value(c.embedding) AS embedding,
          {bucket_cols}
   FROM corpus c, generate_series(1, {_EMB_DIM}) g(i)
   GROUP BY c.vec_id),
-bands AS (
+bands AS MATERIALIZED (
   {band_union}),
 cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
@@ -425,9 +427,9 @@ sims AS (
             JOIN bucketed b ON cand.id_b = b.vec_id,
        generate_series(1, {_EMB_DIM}) g(i)
   GROUP BY cand.id_a, cand.id_b),
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT id_a, id_b FROM sims WHERE dot / (n_a * n_b) >= 0.99),
-edges AS (
+edges AS MATERIALIZED (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION SELECT id_b, id_a FROM pairs),
 reach AS (
@@ -638,19 +640,21 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs, docs)
 
 
+# shingles, sizes, pairs and edges are each read more than once, so they
+# are MATERIALIZED rather than inlined at every reference
 SQL_DEDUP_CLUSTERS = f"""
-WITH RECURSIVE shingles AS ({_SHINGLE_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
+WITH RECURSIVE shingles AS MATERIALIZED ({_SHINGLE_SQL}),
+sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
   FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id),
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id
   JOIN sizes sb ON i.doc_b = sb.doc_id
   WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.8),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION SELECT doc_b, doc_a FROM pairs),
 reach AS (

@@ -328,6 +328,9 @@ def q_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_lsh_band_sweep() -> str:
+    """Every CTE read more than once is MATERIALIZED: DuckDB would
+    otherwise re-run the shingle self-join and the signatures for each
+    banding config."""
     from .contract_ext import _SHINGLE_SQL
 
     parts = []
@@ -348,11 +351,11 @@ FROM (SELECT CAST(count(*) AS BIGINT) AS n_cand FROM cands_{r}) c,
      tcount t""")
         # noqa: W291
     bands = ",\n".join(
-        f"""bands_{r} AS (
+        f"""bands_{r} AS MATERIALIZED (
   SELECT doc_id, CAST(floor(seed / {r}) AS INT) AS band,
          md5(string_agg(mh, '|' ORDER BY seed)) AS band_key
   FROM sigs GROUP BY doc_id, CAST(floor(seed / {r}) AS INT)),
-cands_{r} AS (
+cands_{r} AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands_{r} a JOIN bands_{r} b
     ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)"""
@@ -360,19 +363,19 @@ cands_{r} AS (
     )
     union = "\nUNION ALL\n".join(parts)
     return f"""
-WITH shingles AS ({_SHINGLE_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
+WITH shingles AS MATERIALIZED ({_SHINGLE_SQL}),
+sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
   FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id),
-truth AS (
+truth AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id JOIN sizes sb ON i.doc_b = sb.doc_id
   WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter)
         >= {_SWEEP_T}),
-tcount AS (SELECT CAST(count(*) AS BIGINT) AS n_true FROM truth),
-sigs AS (
+tcount AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n_true FROM truth),
+sigs AS MATERIALIZED (
   SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || ':' || sh)) AS mh
   FROM shingles, generate_series(0, {_SWEEP_SEEDS - 1}) s(seed)
   GROUP BY doc_id, seed),

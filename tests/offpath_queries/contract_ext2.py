@@ -1154,11 +1154,12 @@ def q_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_survivorship() -> str:
     from .contract_ext import SQL_DEDUP_CLUSTERS
 
-    # reuse the dedup_clusters CTE chain (shingles → pairs → components),
-    # swap the final projection for the election + rollup
+    # reuse the dedup_clusters CTE chain (shingles → pairs → components,
+    # its re-read CTEs MATERIALIZED), swap the final projection for the
+    # election + rollup; assign is read twice, so it is MATERIALIZED too
     base = SQL_DEDUP_CLUSTERS.split("comp AS")[0]
     return f"""{base}comp AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
-assign AS (
+assign AS MATERIALIZED (
   SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id, d.n_chars
   FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
   WHERE d.doc_id < 300),

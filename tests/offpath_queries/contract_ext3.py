@@ -477,17 +477,19 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_lsh_recall() -> str:
+    """Every CTE read more than once is MATERIALIZED, not inlined at each
+    reference."""
     from .contract_ext import _SHINGLE_SQL
     from gridmet_etl_spark.operators.dedup import N_MINHASH_SEEDS, ROWS_PER_BAND
 
     return f"""
-WITH shingles AS ({_SHINGLE_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
+WITH shingles AS MATERIALIZED ({_SHINGLE_SQL}),
+sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
   FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id),
-truth AS (
+truth AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id JOIN sizes sb ON i.doc_b = sb.doc_id
   WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= {_RECALL_T}),
@@ -495,15 +497,15 @@ sigs AS (
   SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || ':' || sh)) AS mh
   FROM shingles, generate_series(0, {N_MINHASH_SEEDS - 1}) s(seed)
   GROUP BY doc_id, seed),
-bands AS (
+bands AS MATERIALIZED (
   SELECT doc_id, CAST(floor(seed / {ROWS_PER_BAND}) AS INT) AS band,
          md5(string_agg(mh, '|' ORDER BY seed)) AS band_key
   FROM sigs GROUP BY doc_id, CAST(floor(seed / {ROWS_PER_BAND}) AS INT)),
-cands AS (
+cands AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
     ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-hit AS (SELECT * FROM truth SEMI JOIN cands USING (doc_a, doc_b))
+hit AS MATERIALIZED (SELECT * FROM truth SEMI JOIN cands USING (doc_a, doc_b))
 SELECT (SELECT count(*) FROM truth) AS n_true,
        (SELECT count(*) FROM cands) AS n_cand,
        (SELECT count(*) FROM hit) AS n_hit,

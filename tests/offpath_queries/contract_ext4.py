@@ -948,26 +948,29 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_lpa_communities(n_rounds: int = _LPA_ROUNDS) -> str:
+    """The CTEs read more than once are MATERIALIZED: DuckDB would
+    otherwise inline the shingle self-join into every round."""
     from .contract_ext import _SHINGLE_SQL
 
     parts = [
-        f"""shingles AS ({_SHINGLE_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
+        f"""shingles AS MATERIALIZED ({_SHINGLE_SQL}),
+sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
   FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id),
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b FROM inter i
   JOIN sizes sa ON i.doc_a = sa.doc_id
   JOIN sizes sb ON i.doc_b = sb.doc_id
   WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.5),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION SELECT doc_b, doc_a FROM pairs),
-l0 AS (SELECT DISTINCT src AS node, src AS community FROM edges)"""
+l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS community FROM edges)"""
     ]
     for r in range(1, n_rounds + 1):
+        mat = "MATERIALIZED " if r < n_rounds else ""
         parts.append(f"""
 n{r} AS (
   SELECT e.src, l.community, count(*) AS n
@@ -978,7 +981,7 @@ t{r} AS (
     SELECT src, community,
            row_number() OVER (PARTITION BY src ORDER BY n DESC, community) AS rn
     FROM n{r}) WHERE rn = 1),
-l{r} AS (
+l{r} AS {mat}(
   SELECT l.node, coalesce(t.community, l.community) AS community
   FROM l{r - 1} l LEFT JOIN t{r} t USING (node))""")
     return (

@@ -59,25 +59,28 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_pca_power() -> str:
+    """Every CTE read more than once (the covariance chain and the last
+    two iterates) is MATERIALIZED, not inlined at each reference."""
     matvec = (
         "SELECT c.i AS j, sum(c.cov * {v}.x) AS x\n"
         "  FROM c JOIN {v} ON c.j = {v}.j GROUP BY c.i"
     )
     rounds = ",\n".join(
-        f"v{r + 1} AS (\n  {matvec.format(v=f'v{r}')})"
+        f"v{r + 1} AS {'MATERIALIZED ' if r + 1 >= _PCA_ROUNDS - 1 else ''}(\n"
+        f"  {matvec.format(v=f'v{r}')})"
         for r in range(_PCA_ROUNDS)
     )
     last, prev = f"v{_PCA_ROUNDS}", f"v{_PCA_ROUNDS - 1}"
     return f"""
-WITH e AS (
+WITH e AS MATERIALIZED (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
          CAST(unnest(embedding) AS DOUBLE) AS x
   FROM embeddings),
-cu AS (
+cu AS MATERIALIZED (
   SELECT a.i AS i, b.i AS j, ROUND(covar_pop(a.x, b.x), {R}) + 0 AS cov
   FROM e a JOIN e b ON a.vec_id = b.vec_id AND b.i >= a.i
   GROUP BY a.i, b.i),
-c AS (SELECT i, j, cov FROM cu
+c AS MATERIALIZED (SELECT i, j, cov FROM cu
       UNION ALL
       SELECT j AS i, i AS j, cov FROM cu WHERE i <> j),
 v0 AS (SELECT CAST(r.range AS INT) AS j, 1.0 AS x FROM range(1, {EMB_DIM + 1}) r),

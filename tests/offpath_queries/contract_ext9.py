@@ -638,7 +638,7 @@ def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Misra-Gries heavy hitters over event user_ids, folded through 3
     deterministic slices (event_id mod 3) at capacity 12 — the O(capacity)
     frequent-items summary with its error bound (est ≤ true ≤ est_hi),
-    exercising the same merge the streaming twin runs per micro-batch."""
+    exercising the summary merge that ``mg_fold`` applies per slice."""
     from gridmet_etl_spark.operators.sketch import mg_fold
     from gridmet_etl_spark.sources.readers import read_events
 

@@ -92,6 +92,26 @@ def test_cli_one_sided_date_range_exits_2(fixdir, tmp_path, capsys, command, inp
     assert not out.exists()
 
 
+@pytest.mark.parametrize(
+    "command, inputs",
+    [
+        ("gridmet-etl", ["--grid", "grid.parquet", "--weights", "weights.parquet"]),
+        ("cfsv2-etl", ["--grid-ens", "grid_ens.parquet", "--weights", "weights_ens.parquet",
+                       "--elevation", "elevation.parquet"]),
+    ],
+)
+def test_cli_reversed_date_range_exits_2(fixdir, tmp_path, capsys, command, inputs):
+    """A start date after the end date is rejected before any work: the
+    time filter would keep no day and the run would write an empty
+    dataset."""
+    args = [a if a.startswith("--") else os.path.join(fixdir, a) for a in inputs]
+    out = tmp_path / "out"
+    rc = main([command, *args, "--start-date", "1980-01-07", "--end-date", "1980-01-01", "--out", str(out)])
+    assert rc == 2
+    assert "--start-date must not be after --end-date" in capsys.readouterr().err
+    assert not out.exists()
+
+
 def test_cli_cfsv2_method2_partitioned(spark, fixdir, tmp_path):
     rc = main(
         [

@@ -192,12 +192,12 @@ def test_opendap_fetcher_end_to_end_real_dap_bytes(spark, tmp_path, monkeypatch)
 def test_subdaily_ingest_collapses_to_daily_mean(spark, tmp_path, monkeypatch):
     """Sub-daily (6-hourly) DAP data through the FULL ingest + weighted
     aggregation: the fetcher emits one GRID_SCHEMA row per timestep with
-    the same date label, and weighted_mean's Σw·v/Σw over the duplicate
+    the same date label, and weighted_mean_wide's Σw·v/Σw over the duplicate
     cell-day rows yields the area-weighted DAILY MEAN of the sub-daily
     values (documented in ingest.py)."""
     import builtins
 
-    from gridmet_etl_spark.operators.weighted_agg import weighted_mean
+    from gridmet_etl_spark.operators.weighted_agg import weighted_mean_wide
     from gridmet_etl_spark.sources.ingest import make_opendap_fetcher
 
     dds = """Dataset {
@@ -254,5 +254,5 @@ def test_subdaily_ingest_collapses_to_daily_mean(spark, tmp_path, monkeypatch):
     weights = spark.createDataFrame(
         [(7, 0, 0, 1.0)], ["feature_id", "i", "j", "wght"]
     )
-    [row] = weighted_mean(grid, weights).collect()
+    [row] = weighted_mean_wide(grid, weights, ["pr"]).withColumnRenamed("pr", "value").collect()
     assert row.value == pytest.approx(3.0)  # daily mean of 1,2,3,6

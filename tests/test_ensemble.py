@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gridmet_etl_spark.operators.ensemble import concat_members, ensemble_median, ensemble_stats
+from gridmet_etl_spark.operators.ensemble import concat_members, ensemble_median
 
 
 @pytest.fixture(scope="module")
@@ -36,13 +36,6 @@ def test_median_permutation_invariant(spark, grid_ens):
     b = ensemble_median(permuted).withColumnRenamed("value", "b")
     joined = a.join(b, ["var", "time", "i", "j"])
     assert joined.filter(F.abs(F.col("a") - F.col("b")) > 1e-12).count() == 0
-
-
-def test_ensemble_stats_consistency(spark, grid_ens):
-    st = ensemble_stats(grid_ens.filter((F.col("var") == "sph") & (F.col("i") == 0))).toPandas()
-    assert (st["n_members"] == 48).all()
-    assert (st["ens_min"] <= st["ens_median"]).all()
-    assert (st["ens_median"] <= st["ens_max"]).all()
 
 
 def test_concat_members_tags(spark, grid):

@@ -14,13 +14,13 @@ from gridmet_etl_spark.operators.fill import (
     nearest_donor,
     scatter_fill,
 )
-from gridmet_etl_spark.operators.weighted_agg import weighted_mean
+from gridmet_etl_spark.operators.weighted_agg import weighted_mean_wide
 from gridmet_etl_spark.plans.gridmet import gridmet_pipeline
 
 
 @pytest.fixture(scope="module")
 def output_long(spark, grid, weights):
-    return weighted_mean(grid.filter(F.col("var") == "tmmx"), weights, masked=True).cache()
+    return weighted_mean_wide(grid, weights, ["tmmx"], masked=True).withColumnRenamed("tmmx", "value").cache()
 
 
 def _numpy_nearest(missing_pd, present_pd):

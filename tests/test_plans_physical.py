@@ -5,11 +5,7 @@ executed plan — regression-guarded, not just documented."""
 import pytest
 from pyspark.sql import functions as F
 
-from gridmet_etl_spark.operators.pivot import pivot_wide
-from gridmet_etl_spark.operators.weighted_agg import (
-    weighted_mean_all_vars,
-    weighted_mean_wide,
-)
+from gridmet_etl_spark.operators.weighted_agg import weighted_mean_wide
 from gridmet_etl_spark.plans.cfsv2 import cfsv2_ensemble_pipeline, cfsv2_median_pipeline
 from gridmet_etl_spark.plans.gridmet import gridmet_pipeline
 
@@ -65,29 +61,6 @@ def test_wide_agg_single_shuffle(spark, fresh_grid, fresh_weights):
     n_exchanges = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n_exchanges == 1, plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_wide_agg_equals_pivot_path(spark, grid, weights):
-    """The 1-shuffle conditional agg ≡ the 2-shuffle long-agg→pivot path."""
-    wide = weighted_mean_wide(grid, weights, GRIDMET_SRC, masked=True)
-    long_agg = weighted_mean_all_vars(grid, weights, variables=GRIDMET_SRC, masked=True)
-    pivoted = pivot_wide(long_agg, {v: v for v in GRIDMET_SRC})
-    a = wide.orderBy("feature_id", "time").toPandas()
-    b = pivoted.orderBy("feature_id", "time").toPandas()[a.columns]
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-12)
-
-
-def test_wide_agg_strict_equals_pivot_path(spark, grid, weights):
-    wide = weighted_mean_wide(grid, weights, GRIDMET_SRC, masked=False)
-    long_agg = weighted_mean_all_vars(grid, weights, variables=GRIDMET_SRC, masked=False)
-    pivoted = pivot_wide(long_agg, {v: v for v in GRIDMET_SRC})
-    a = wide.orderBy("feature_id", "time").toPandas()
-    b = pivoted.orderBy("feature_id", "time").toPandas()[a.columns]
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-12)
 
 
 def test_gridmet_pipeline_scan_pruned(spark, fresh_grid, fresh_weights):

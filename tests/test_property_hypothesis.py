@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 
 from gridmet_etl_spark.functions.physics import relative_humidity, saturation_vapor_pressure
 from gridmet_etl_spark.functions.units import convert
-from gridmet_etl_spark.operators.weighted_agg import weighted_mean
+from gridmet_etl_spark.operators.weighted_agg import weighted_mean_wide
 
 cell = st.tuples(
     st.integers(0, 5),  # i
@@ -36,7 +36,7 @@ def test_weighted_mean_matches_numpy_model(spark, cells, wghts, masked):
         grid_rows, "var string, ens int, time string, i int, j int, lat double, lon double, value double"
     )
     weights = spark.createDataFrame(weight_rows, "feature_id long, i int, j int, wght double")
-    out = weighted_mean(grid, weights, masked=masked).collect()
+    out = weighted_mean_wide(grid, weights, ["v"], masked=masked).withColumnRenamed("v", "value").collect()
     assert len(out) == 1
     got = out[0].value
 

@@ -237,7 +237,7 @@ def test_masked_vs_strict_mean_on_real_weights(spark, real_weights_pdf):
     checked against an independent numpy masked recomputation."""
     import numpy as np
 
-    from gridmet_etl_spark.operators.weighted_agg import weighted_mean
+    from gridmet_etl_spark.operators.weighted_agg import weighted_mean_wide
     from gridmet_etl_spark.sources.readers import read_weights_csv
 
     w = real_weights_pdf.rename(columns={"nhru_v1_1": "fid"})
@@ -249,11 +249,15 @@ def test_masked_vs_strict_mean_on_real_weights(spark, real_weights_pdf):
 
     strict = {
         r.feature_id: r.value
-        for r in weighted_mean(grid, weights, masked=False).collect()
+        for r in weighted_mean_wide(grid, weights, ["tmmx"], masked=False)
+        .withColumnRenamed("tmmx", "value")
+        .collect()
     }
     masked = {
         r.feature_id: r.value
-        for r in weighted_mean(grid, weights, masked=True).collect()
+        for r in weighted_mean_wide(grid, weights, ["tmmx"], masked=True)
+        .withColumnRenamed("tmmx", "value")
+        .collect()
     }
 
     touched = set(w.loc[w["i"] < 40, "fid"])

@@ -43,7 +43,8 @@ def test_kmv_estimator_within_rse(spark):
 
 def test_kmv_merge_invariance(spark):
     """union-then-sketch == sketch-then-merge (re-rank of unioned
-    sketches) — the mergeability the streaming twin relies on."""
+    sketches) — the mergeability that lets sketches of separate batches
+    combine."""
     from pyspark.sql.window import Window
 
     from gridmet_etl_spark.operators.sketch import kmv_build

@@ -7,11 +7,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gridmet_etl_spark.operators.weighted_agg import (
-    weight_sum_qa,
-    weighted_mean,
-    weighted_mean_all_vars,
-)
+from gridmet_etl_spark.operators.weighted_agg import weight_sum_qa, weighted_mean_wide
+
+GRIDMET_SRC = ["tmmx", "tmmn", "pr", "rmax", "rmin", "vs"]
 
 
 @pytest.fixture(scope="module")
@@ -36,26 +34,30 @@ def _golden_weighted(g, w, var, masked):
 
 @pytest.mark.parametrize("masked", [False, True])
 def test_weighted_mean_matches_numpy(spark, grid, weights, golden, masked):
+    """Each column of ONE six-variable call equals its own numpy golden,
+    so a missing cell of one variable never reaches another's column."""
     g, w = golden
-    res = (
-        weighted_mean(grid.filter(F.col("var") == "tmmx"), weights, masked=masked)
+    wide = (
+        weighted_mean_wide(grid, weights, GRIDMET_SRC, masked=masked)
         .toPandas()
-        .set_index(["feature_id", "time"])["value"]
+        .set_index(["feature_id", "time"])
     )
-    exp = _golden_weighted(g, w, "tmmx", masked)
-    assert len(res) == len(exp)
-    for k, ev in exp.items():
-        rv = res.loc[k]
-        if np.isnan(ev):
-            assert np.isnan(rv), f"{k}: expected NaN, got {rv}"
-        else:
-            assert rv == pytest.approx(ev, rel=1e-12), k
+    for var in GRIDMET_SRC:
+        res = wide[var]
+        exp = _golden_weighted(g, w, var, masked)
+        assert len(res) == len(exp)
+        for k, ev in exp.items():
+            rv = res.loc[k]
+            if np.isnan(ev):
+                assert np.isnan(rv), f"{var} {k}: expected NaN, got {rv}"
+            else:
+                assert rv == pytest.approx(ev, rel=1e-12), (var, k)
 
 
 def test_strict_mean_poisons_on_null(spark, grid, weights):
     """A1: any NULL cell in a group → NULL result (NaN-intolerant mean)."""
-    strict = weighted_mean(grid.filter(F.col("var") == "pr"), weights, masked=False)
-    masked = weighted_mean(grid.filter(F.col("var") == "pr"), weights, masked=True)
+    strict = weighted_mean_wide(grid, weights, ["pr"], masked=False).withColumnRenamed("pr", "value")
+    masked = weighted_mean_wide(grid, weights, ["pr"], masked=True).withColumnRenamed("pr", "value")
     n_null_strict = strict.filter(F.col("value").isNull()).count()
     n_null_masked = masked.filter(F.col("value").isNull()).count()
     assert n_null_strict > 0  # fixtures have ~2% null cells
@@ -65,21 +67,14 @@ def test_strict_mean_poisons_on_null(spark, grid, weights):
 def test_masked_equals_strict_when_no_nulls(spark, grid, weights):
     """Property (§5): masked_mean == mean on null-free input."""
     clean = grid.filter(F.col("var") == "tmmx").filter(F.col("value").isNotNull())
-    a = weighted_mean(clean, weights, masked=False).withColumnRenamed("value", "a")
-    b = weighted_mean(clean, weights, masked=True).withColumnRenamed("value", "b")
+    a = weighted_mean_wide(clean, weights, ["tmmx"], masked=False).withColumnRenamed("tmmx", "a")
+    b = weighted_mean_wide(clean, weights, ["tmmx"], masked=True).withColumnRenamed("tmmx", "b")
     diff = (
         a.join(b, ["feature_id", "time"])
         .filter(F.abs(F.col("a") - F.col("b")) > 1e-12)
         .count()
     )
     assert diff == 0
-
-
-def test_all_vars_single_pass(spark, grid, weights):
-    res = weighted_mean_all_vars(grid, weights)
-    n_features = weights.select("feature_id").distinct().count()
-    n_days = grid.select("time").distinct().count()
-    assert res.count() == 6 * n_features * n_days
 
 
 def test_weight_sum_invariant(spark, weights):
@@ -92,7 +87,7 @@ def test_weight_sum_invariant(spark, weights):
 def test_broadcast_join_in_plan(spark, grid, weights):
     """The weights join must be a broadcast hash join (map-side, no fact
     shuffle) — the core scale property."""
-    plan = weighted_mean(grid, weights)._jdf.queryExecution().executedPlan().toString()
+    plan = weighted_mean_wide(grid, weights, GRIDMET_SRC)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
 
@@ -114,12 +109,16 @@ def test_nan_counts_as_missing(spark):
     )
     masked = {
         r.feature_id: r.value
-        for r in weighted_mean(grid, weights, masked=True).collect()
+        for r in weighted_mean_wide(grid, weights, ["v"], masked=True)
+        .withColumnRenamed("v", "value")
+        .collect()
     }
     assert masked[10] == pytest.approx(1.0)  # NaN cell excluded from both sums
     assert masked[11] is None  # all-missing -> NULL
     strict = {
         r.feature_id: r.value
-        for r in weighted_mean(grid, weights, masked=False).collect()
+        for r in weighted_mean_wide(grid, weights, ["v"], masked=False)
+        .withColumnRenamed("v", "value")
+        .collect()
     }
     assert strict[10] is None and strict[11] is None  # NaN poisons
