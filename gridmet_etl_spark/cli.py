@@ -4,8 +4,6 @@ Commands:
   gridmet-etl  — historical daily ETL: grid × weights → per-HRU daily series
   cfsv2-etl    — forecast ensembles: method 1 (median) or 2 (all members)
   check-fresh  — T1 availability gate (exit 1 when source data is stale)
-  corpus-etl   — training-corpus hygiene/export: clean → dedup → decontaminate
-                 → split → token-budget shards (extension surface)
 
 Argument surface mirrors the reference's flags (--start-date/--end-date
 validated as %Y-%m-%d, --fid, --partial → masked_mean, --fill-missing,
@@ -67,18 +65,6 @@ def build_parser() -> argparse.ArgumentParser:
     f = sub.add_parser("check-fresh", help="THREDDS freshness gate (T1)")
     f.add_argument("--base-url", required=True)
     f.add_argument("--datasets", nargs="*")
-
-    k = sub.add_parser(
-        "corpus-etl",
-        help="training-corpus ETL: clean → dedup → decontaminate → split → shard",
-    )
-    k.add_argument("--docs", required=True, help="documents parquet (doc_id, text)")
-    k.add_argument("--benchmark", help="benchmark/eval parquet to decontaminate against")
-    k.add_argument("--budget", type=int, default=1_000_000, help="tokens per train shard")
-    k.add_argument("--train", type=float, default=0.9)
-    k.add_argument("--val", type=float, default=0.05)
-    k.add_argument("--test", type=float, default=0.05)
-    k.add_argument("--out", required=True, help="manifest output dir (partitioned by split)")
     return p
 
 
@@ -113,12 +99,11 @@ def main(argv: list[str] | None = None) -> int:
         if args.fill_missing and not args.features:
             print("--fill-missing requires --features", file=sys.stderr)
             return 2
-        # the pipelines filter time only when both bounds are set, so one
-        # bound alone would silently process every landed day
+        # time_filter raises on a one-sided or reversed range too; checked
+        # here so the command exits 2 before a session starts
         if (args.start_date is None) != (args.end_date is None):
             print("--start-date and --end-date must be given together", file=sys.stderr)
             return 2
-        # a reversed range keeps no day: it would write an empty dataset
         if args.start_date and datetime.strptime(args.start_date, "%Y-%m-%d") > datetime.strptime(
             args.end_date, "%Y-%m-%d"
         ):
@@ -192,21 +177,6 @@ def main(argv: list[str] | None = None) -> int:
             calendar=CFSV2_CALENDAR,  # cfsv2_median_header.md:43
         )
         print(f"wrote {path}")
-        return 0
-
-    if args.command == "corpus-etl":
-        from .plans.corpus import corpus_pipeline
-
-        docs = spark.read.parquet(args.docs)
-        bench = (
-            spark.read.parquet(args.benchmark)
-            if args.benchmark
-            else spark.createDataFrame([], "doc_id long, text string")
-        )
-        weights = {"train": args.train, "val": args.val, "test": args.test}
-        manifest = corpus_pipeline(docs, bench, budget=args.budget, weights=weights)
-        manifest.write.mode("overwrite").partitionBy("split").parquet(args.out)
-        print(f"wrote {args.out}")
         return 0
 
     return 2  # pragma: no cover

@@ -16,6 +16,8 @@ is the pipelines' temporal prune.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -177,8 +179,21 @@ def bounds_to_cells(
     return i0, i1, j0, j1
 
 
-def time_filter(grid: DataFrame, start_date: str, end_date: str) -> DataFrame:
-    """P3: inclusive [start, end] date-range restriction (etl.py:407, 670)."""
+def time_filter(
+    grid: DataFrame, start_date: str | None = None, end_date: str | None = None
+) -> DataFrame:
+    """P3: inclusive [start, end] date-range restriction (etl.py:407, 670)
+    on YYYY-MM-DD bounds. With neither bound the grid is returned as is.
+    One bound alone, or a start after the end, raises ValueError: the
+    first would silently keep every landed day, the second none."""
+    if not start_date and not end_date:
+        return grid
+    if not start_date or not end_date:
+        raise ValueError(
+            f"start_date and end_date go together (got {start_date!r}, {end_date!r})"
+        )
+    if datetime.strptime(start_date, "%Y-%m-%d") > datetime.strptime(end_date, "%Y-%m-%d"):
+        raise ValueError(f"start_date {start_date} is after end_date {end_date}")
     return grid.filter(F.col("time").between(F.lit(start_date), F.lit(end_date)))
 
 

@@ -63,8 +63,7 @@ def cfsv2_median_pipeline(
     (feature_id, time, tmax, tmin, prcp, humidity). Only the weighted cells
     reach the median shuffle."""
     source_vars = [v[0] for v in CFSV2_VARS.values()]
-    if start_date and end_date:
-        grid_ens = time_filter(grid_ens, start_date, end_date)
+    grid_ens = time_filter(grid_ens, start_date, end_date)
     cells = grid_ens.filter(F.col("var").isin(source_vars)).join(
         F.broadcast(weights.select("i", "j")), on=["i", "j"], how="left_semi"
     )  # P2
@@ -89,8 +88,7 @@ def cfsv2_ensemble_pipeline(
     (feature_id, ens, time, tmax, tmin, prcp, humidity); write with
     ``partitionBy("ens")`` to reproduce the per-member file layout."""
     source_vars = [v[0] for v in CFSV2_VARS.values()]
-    if start_date and end_date:
-        grid_ens = time_filter(grid_ens, start_date, end_date)
+    grid_ens = time_filter(grid_ens, start_date, end_date)
     wide = weighted_mean_wide(
         grid_ens, weights, source_vars, extra_keys=("ens",)
     )  # E1 rewrite: all 48 members + all vars in one shuffle

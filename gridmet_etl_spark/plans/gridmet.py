@@ -51,8 +51,7 @@ def gridmet_pipeline(
     weights join itself (P2).
     """
     source_vars = [v[0] for v in GRIDMET_VARS.values()]
-    if start_date and end_date:
-        grid = time_filter(grid, start_date, end_date)  # P3
+    grid = time_filter(grid, start_date, end_date)  # P3
 
     # one shuffle: every variable's mean in one conditional aggregation
     wide = weighted_mean_wide(grid, weights, source_vars, masked=partial)

@@ -835,65 +835,6 @@ LEFT JOIN shared s ON d.doc_id = s.doc_id
 """
 
 
-# ---------------------------------------------------------------------------
-# Corpus pipeline (flagship composition of the hygiene/export surface)
-# ---------------------------------------------------------------------------
-
-_CLEAN_SQL = (
-    r"trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-    r"text, '[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'),"
-    r" 'https?://[^\s]+', '<URL>', 'g'),"
-    r" '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),"
-    r" '\s+', ' ', 'g'))"
-)
-
-
-def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship corpus ETL: clean → exact-dedup → decontaminate (vs the
-    doc_id ≥ 400 synthetic benchmark) → leakage-safe split → token-budget
-    shard packing of the train split — one lazy DAG, full oracle."""
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline
-
-    docs = _docs_par(spark, sf_dir)
-    train_corpus = docs.filter(F.col("doc_id") < 400)
-    bench = docs.filter(F.col("doc_id") >= 400)
-    return corpus_pipeline(train_corpus, bench, budget=2000, group_width=100)
-
-
-def _sql_corpus_pipeline() -> str:
-    from gridmet_etl_spark.operators.sampling import HASH_BUCKETS, sql_hash_bucket
-
-    bucket = sql_hash_bucket("doc_id", "split")
-    t_train = int(0.9 * HASH_BUCKETS)
-    t_val = int(0.95 * HASH_BUCKETS)
-    return f"""
-WITH cleaned AS (
-  SELECT doc_id, md5(lower({_CLEAN_SQL})) AS fp,
-         len(string_split({_CLEAN_SQL}, ' ')) AS n_tokens
-  FROM documents WHERE doc_id < 400),
-kept AS (
-  SELECT doc_id, fp, n_tokens FROM (
-    SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM cleaned)
-  WHERE rn = 1),
-evalfps AS (
-  SELECT DISTINCT md5(lower({_CLEAN_SQL})) AS fp FROM documents WHERE doc_id >= 400),
-survivors AS (
-  SELECT doc_id, n_tokens,
-         CASE WHEN {bucket} < {t_train} THEN 'train'
-              WHEN {bucket} < {t_val} THEN 'val'
-              ELSE 'test' END AS split
-  FROM kept WHERE fp NOT IN (SELECT fp FROM evalfps)),
-train_shards AS (
-  SELECT doc_id,
-         CAST(floor(COALESCE(SUM(n_tokens)
-                      OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                    0) / 2000.0) AS BIGINT) AS shard
-  FROM survivors WHERE split = 'train')
-SELECT s.doc_id, s.split, s.n_tokens, t.shard
-FROM survivors s LEFT JOIN train_shards t ON s.doc_id = t.doc_id
-"""
-
-
 def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd-refined IVF assignment (3 rounds of spherical k-means over the
     lowest-id seeds, then nearest-centroid labels). The refinement is
@@ -953,32 +894,6 @@ c{it + 1} AS (
         "WITH " + ",".join(parts)
         + "\nSELECT vec_id, cid AS cluster FROM final_assign"
     )
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-sequence materialization downstream of corpus_pipeline:
-    per train shard, id-ordered cleaned docs joined with a separator."""
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline, pack_sequences
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    train_corpus = docs.filter(F.col("doc_id") < 400)
-    bench = docs.filter(F.col("doc_id") >= 400)
-    manifest = corpus_pipeline(train_corpus, bench, budget=2000, group_width=100)
-    return pack_sequences(train_corpus, manifest, sep="\n\n")
-
-
-def _sql_pack_sequences() -> str:
-    return f"""
-WITH manifest AS ({_sql_corpus_pipeline()}),
-train AS (
-  SELECT m.doc_id, m.shard, m.n_tokens, {_CLEAN_SQL} AS clean
-  FROM manifest m JOIN documents d ON m.doc_id = d.doc_id
-  WHERE m.split = 'train')
-SELECT shard,
-       string_agg(clean, chr(10) || chr(10) ORDER BY doc_id) AS seq_text,
-       count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-FROM train GROUP BY shard
-"""
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3310,6 +3225,4 @@ EXT_QUERIES = {
     "pii_flags": (q_pii_flags, SQL_PII_FLAGS),
     "decontam_exact": (q_decontam_exact, SQL_DECONTAM_EXACT),
     "decontam_fuzzy": (q_decontam_fuzzy, SQL_DECONTAM_FUZZY),
-    "corpus_pipeline": (q_corpus_pipeline, _sql_corpus_pipeline()),
-    "pack_sequences": (q_pack_sequences, _sql_pack_sequences()),
 }

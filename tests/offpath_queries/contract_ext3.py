@@ -343,103 +343,6 @@ GROUP BY c.doc_a, c.doc_b
 
 
 # ---------------------------------------------------------------------------
-# corpus_pipeline_v2: the modern pretraining recipe flagship
-# ---------------------------------------------------------------------------
-
-_V2_BUDGET = 2000
-_V2_SOURCE_BUDGET = 4000
-_V2_NLL_CUT = 3.45
-_V2_MIN_TOKENS = 5
-
-
-def q_corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """corpus_pipeline + the session-C stages: bigram-LM quality gate and
-    per-source token quota between decontamination and splitting. One lazy
-    DAG; the whole recipe has a chained-CTE oracle."""
-    from .contract_ext import _docs_par
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline_v2
-
-    docs = _docs_par(spark, sf_dir)
-    train_corpus = docs.where(F.col("doc_id") < 400)
-    bench = docs.where(F.col("doc_id") >= 400)
-    return corpus_pipeline_v2(
-        train_corpus,
-        bench,
-        budget=_V2_BUDGET,
-        source_budget=_V2_SOURCE_BUDGET,
-        nll_cutoff=_V2_NLL_CUT,
-        min_tokens=_V2_MIN_TOKENS,
-        group_width=100,
-    )
-
-
-def _sql_corpus_pipeline_v2() -> str:
-    from .contract_ext import _CLEAN_SQL
-    from gridmet_etl_spark.operators.sampling import HASH_BUCKETS, sql_hash_bucket
-
-    bucket = sql_hash_bucket("doc_id", "split")
-    t_train = int(0.9 * HASH_BUCKETS)
-    t_val = int(0.95 * HASH_BUCKETS)
-    return f"""
-WITH corpus AS (SELECT * FROM documents WHERE doc_id < 400),
-toks AS (
-  SELECT doc_id, a[i] AS w
-  FROM (SELECT doc_id, string_split(lower(text), ' ') AS a FROM corpus),
-       LATERAL (SELECT unnest(range(1, len(a)+1)) AS i)),
-uni AS (SELECT w, count(*) AS cu FROM toks GROUP BY w),
-tot AS (SELECT count(*) AS n_total FROM toks),
-big AS (
-  SELECT doc_id, a[i] AS w1, a[i+1] AS w2
-  FROM (SELECT doc_id, string_split(lower(text), ' ') AS a FROM corpus),
-       LATERAL (SELECT unnest(range(1, len(a))) AS i)
-  WHERE len(a) >= 2),
-bc AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY w1, w2),
-nll AS (
-  SELECT s.doc_id,
-         ROUND(avg(-ln(0.8 * bc.cb / u1.cu + 0.2 * u2.cu / tot.n_total)), 6) AS nll
-  FROM big s JOIN bc USING (w1, w2)
-  JOIN uni u1 ON u1.w = s.w1 JOIN uni u2 ON u2.w = s.w2, tot
-  GROUP BY s.doc_id),
-cleaned AS (
-  SELECT doc_id, source, md5(lower({_CLEAN_SQL})) AS fp,
-         len(string_split({_CLEAN_SQL}, ' ')) AS n_tokens
-  FROM corpus),
-kept AS (
-  SELECT doc_id, source, fp, n_tokens FROM (
-    SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM cleaned)
-  WHERE rn = 1),
-evalfps AS (
-  SELECT DISTINCT md5(lower({_CLEAN_SQL})) AS fp FROM documents WHERE doc_id >= 400),
-quality AS (
-  SELECT k.doc_id, k.source, k.n_tokens, n.nll
-  FROM kept k JOIN nll n USING (doc_id)
-  WHERE k.fp NOT IN (SELECT fp FROM evalfps)
-    AND n.nll <= {_V2_NLL_CUT} AND k.n_tokens >= {_V2_MIN_TOKENS}),
-quota AS (
-  SELECT doc_id FROM (
-    SELECT doc_id,
-           sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-    FROM quality)
-  WHERE cum <= {_V2_SOURCE_BUDGET}),
-survivors AS (
-  SELECT q.doc_id, q.source, q.n_tokens, q.nll,
-         CASE WHEN {bucket} < {t_train} THEN 'train'
-              WHEN {bucket} < {t_val} THEN 'val'
-              ELSE 'test' END AS split
-  FROM quality q SEMI JOIN quota USING (doc_id)),
-train_shards AS (
-  SELECT doc_id,
-         CAST(floor(COALESCE(SUM(n_tokens)
-                      OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                    0) / {_V2_BUDGET}.0) AS BIGINT) AS shard
-  FROM survivors WHERE split = 'train')
-SELECT s.doc_id, s.source, s.split, s.n_tokens, s.nll, t.shard
-FROM survivors s LEFT JOIN train_shards t ON s.doc_id = t.doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
 # lsh_recall: index-quality evaluation of the LSH candidate generator
 # ---------------------------------------------------------------------------
 
@@ -660,7 +563,6 @@ EXT3_QUERIES = {
     "quota_filter": (q_quota_filter, SQL_QUOTA_FILTER),
     "bpe_compression": (q_bpe_compression, _sql_bpe_compression()),
     "minhash_estimate": (q_minhash_estimate, _sql_minhash_estimate()),
-    "corpus_pipeline_v2": (q_corpus_pipeline_v2, _sql_corpus_pipeline_v2()),
     "lsh_recall": (q_lsh_recall, _sql_lsh_recall()),
     "hard_negatives": (q_hard_negatives, SQL_HARD_NEGATIVES),
     "bpe_merges": (q_bpe_merges, SQL_BPE_MERGES),

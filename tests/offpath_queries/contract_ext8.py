@@ -164,144 +164,6 @@ EXT8_QUERIES["mixture_weights"] = (q_mixture_weights, SQL_MIXTURE_WEIGHTS)
 
 
 # ---------------------------------------------------------------------------
-# corpus_pipeline_v3: line dedup → gate → exact dedup → star-LSH components →
-# canonical keep → split + mixture shares (one lazy DAG, full oracle)
-# ---------------------------------------------------------------------------
-
-
-def q_corpus_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-5 curation flagship over documents rebuilt as 8-token lines
-    (so the single-line synthetic corpus exercises the line stage):
-    plans.corpus.corpus_pipeline_v3 end-to-end."""
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline_v3
-
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    rebuilt = docs.select(
-        "doc_id",
-        "source",
-        F.array_join(
-            F.expr(
-                f"transform(sequence(1, size(split(text, ' ')), {_LINE_W}),"
-                f" st -> array_join(slice(split(text, ' '), st, {_LINE_W}), ' '))"
-            ),
-            "\n",
-        ).alias("text"),
-    )
-    return corpus_pipeline_v3(rebuilt)
-
-
-def _sql_corpus_v3() -> str:
-    # lines, uniq, bands and edges are MATERIALIZED: each is read more than
-    # once, and edges once per step of the recursive reach, which would
-    # otherwise re-run the whole MinHash chain on every step.
-    from .contract_ext import NORM
-    from gridmet_etl_spark.operators.sampling import HASH_BUCKETS, sql_hash_bucket
-
-    bucket = sql_hash_bucket("c.doc_id", "split")
-    t_train = int(0.9 * HASH_BUCKETS)
-    t_val = int(0.95 * HASH_BUCKETS)
-    norm3 = NORM.format(c="text")
-    return f"""
-WITH RECURSIVE base AS (
-  SELECT doc_id, source, string_split(text, ' ') AS a FROM documents),
-lstarts AS (
-  -- len(a)-bounded series via unnest(list) (no lateral table functions
-  -- in this DuckDB build; a fixed cap would diverge on long documents)
-  SELECT doc_id, a, unnest(generate_series(1, len(a), {_LINE_W})) AS st
-  FROM base),
-lines AS MATERIALIZED (
-  SELECT doc_id, CAST((st - 1) / {_LINE_W} AS INT) AS line_no,
-         array_to_string(a[st : st + {_LINE_W - 1}], ' ') AS line
-  FROM lstarts),
-keyed AS (SELECT doc_id, line_no, md5(line) AS d FROM lines),
-firsts AS (
-  SELECT doc_id, line_no,
-         row_number() OVER (PARTITION BY d ORDER BY doc_id, line_no) AS rn
-  FROM keyed),
-kept AS (
-  SELECT l.doc_id, l.line_no, l.line
-  FROM lines l JOIN firsts f
-    ON f.doc_id = l.doc_id AND f.line_no = l.line_no AND f.rn = 1),
-ld AS (
-  SELECT t.doc_id, t.n_lines, coalesce(a.n_kept, 0) AS n_kept,
-         coalesce(a.text, '') AS text
-  FROM (SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY doc_id) t
-  LEFT JOIN (
-    SELECT doc_id, count(*) AS n_kept,
-           string_agg(line, chr(10) ORDER BY line_no) AS text
-    FROM kept GROUP BY doc_id) a ON a.doc_id = t.doc_id),
-gated AS (
-  SELECT * FROM ld WHERE n_kept > 0 AND n_kept * 4 >= n_lines * 1),
-uniq AS MATERIALIZED (
-  SELECT doc_id, n_lines, n_kept, text FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY md5(lower(text)) ORDER BY doc_id) AS rn
-    FROM gated)
-  WHERE rn = 1),
-sh3 AS (
-  SELECT DISTINCT doc_id, substr(t, i, 3) AS sh
-  FROM (SELECT doc_id, {norm3} AS t FROM uniq),
-       generate_series(1, 2000) g(i)
-  WHERE i <= greatest(length(t) - 2, 1)),
-sigs AS (
-  SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || ':' || sh)) AS mh
-  FROM sh3, generate_series(0, {N_MINHASH_SEEDS - 1}) s(seed)
-  GROUP BY doc_id, seed),
-bands AS MATERIALIZED (
-  SELECT doc_id, CAST(floor(seed / {ROWS_PER_BAND}) AS INT) AS band,
-         md5(string_agg(mh, '|' ORDER BY seed)) AS band_key
-  FROM sigs GROUP BY doc_id, CAST(floor(seed / {ROWS_PER_BAND}) AS INT)),
-reps AS (
-  SELECT band, band_key, min(doc_id) AS doc_a, count(*) AS n
-  FROM bands GROUP BY band, band_key),
-star AS (
-  SELECT DISTINCT r.doc_a, b.doc_id AS doc_b
-  FROM bands b
-  JOIN reps r ON r.band = b.band AND r.band_key = b.band_key
-  WHERE r.n > 1 AND b.doc_id <> r.doc_a),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM star
-  UNION SELECT doc_b, doc_a FROM star),
-reach AS (
-  SELECT src AS node, src AS lbl FROM edges
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-comp AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
-labeled AS (
-  SELECT u.doc_id, u.n_lines, u.n_kept, u.text,
-         coalesce(c.cluster_id, u.doc_id) AS cluster_id
-  FROM uniq u LEFT JOIN comp c ON c.node = u.doc_id),
-sizes AS (
-  SELECT cluster_id, count(*) AS n_members FROM labeled GROUP BY cluster_id),
-canon AS (
-  SELECT l.doc_id, l.n_lines, l.n_kept, s.n_members,
-         CAST(len(string_split(replace(l.text, chr(10), ' '), ' ')) AS BIGINT)
-           AS n_tokens
-  FROM labeled l JOIN sizes s ON s.cluster_id = l.cluster_id
-  WHERE l.cluster_id = l.doc_id),
-manifest AS (
-  SELECT c.*, d.source,
-         CASE WHEN {bucket} < {t_train} THEN 'train'
-              WHEN {bucket} < {t_val} THEN 'val'
-              ELSE 'test' END AS split
-  FROM canon c JOIN documents d ON d.doc_id = c.doc_id),
-per AS (
-  SELECT source, CAST(sum(n_tokens) AS DOUBLE) AS sz
-  FROM manifest GROUP BY source),
-tot AS (SELECT sum(sqrt(sz)) AS tt FROM per),
-mix AS (
-  SELECT source, ROUND(sqrt(sz) / tt, {R}) + 0 AS share_temp
-  FROM per CROSS JOIN tot)
-SELECT m.doc_id, m.source, m.n_lines, m.n_kept, m.n_tokens, m.n_members,
-       m.split, x.share_temp
-FROM manifest m JOIN mix x ON x.source = m.source
-"""
-
-
-EXT8_QUERIES["corpus_pipeline_v3"] = (q_corpus_pipeline_v3, _sql_corpus_v3())
-
-
-# ---------------------------------------------------------------------------
 # jl_project: deterministic Johnson–Lindenstrauss projection (oracle-checkable)
 # ---------------------------------------------------------------------------
 

@@ -24,6 +24,61 @@ def test_valid_date():
         valid_date("01/01/1980")
 
 
+CLI_MODULES = {
+    "cli", "session", "schemas",
+    "functions.physics", "functions.units",
+    "operators.bbox", "operators.ensemble", "operators.fill", "operators.weighted_agg",
+    # only sources/writers.py::write_curve_clustered imports it, an off-path
+    # writer; it leaves this list together with that writer
+    "operators.scale",
+    "plans.cfsv2", "plans.gridmet",
+    "sources.geojson_micro", "sources.nc_micro", "sources.prms", "sources.proj_micro",
+    "sources.readers", "sources.shp_micro", "sources.thredds", "sources.writers",
+}
+
+
+def test_cli_imports_only_the_paper_modules():
+    """The package modules reachable from cli.py through its import
+    statements (function-local ones too, relative ones resolved) are
+    exactly the paper's. Package __init__ files are not counted."""
+    import ast
+
+    import gridmet_etl_spark
+
+    root = os.path.dirname(gridmet_etl_spark.__file__)
+
+    def is_module(name):
+        return os.path.isfile(os.path.join(root, *name.split(".")) + ".py")
+
+    seen, todo = set(), ["cli"]
+    while todo:
+        mod = todo.pop()
+        if mod in seen:
+            continue
+        seen.add(mod)
+        pkg = mod.split(".")[:-1]
+        with open(os.path.join(root, *mod.split(".")) + ".py") as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                if node.level:
+                    base = pkg[: len(pkg) - node.level + 1]
+                    m = ".".join(base + ([node.module] if node.module else []))
+                    m = f"gridmet_etl_spark.{m}" if m else "gridmet_etl_spark"
+                else:
+                    m = node.module
+                names = [m] + [f"{m}.{a.name}" for a in node.names]
+            else:
+                continue
+            for name in names:
+                head, _, rest = name.partition(".")
+                if head == "gridmet_etl_spark" and is_module(rest):
+                    todo.append(rest)
+    assert seen == CLI_MODULES
+
+
 def test_cli_gridmet_end_to_end(spark, fixdir, tmp_path):
     rc = main(
         [
@@ -284,29 +339,6 @@ def test_ingest_append_batches_equal_one_shot(spark, tmp_path):
     b = spark.read.parquet(batched)
     assert a.count() == b.count() == 2 * 10 * 10 * 10
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_cli_corpus_etl_end_to_end(spark, tmp_path):
-    docs_path, bench_path, out = str(tmp_path / "docs"), str(tmp_path / "bench"), str(tmp_path / "out")
-    rows = [(i, f"document number {i} body text") for i in range(40)]
-    rows.append((50, "document number 7 body text"))  # exact dup of doc 7
-    rows.append((51, "held out benchmark prompt"))
-    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(docs_path)
-    spark.createDataFrame(
-        [(900, "HELD OUT benchmark prompt")], ["doc_id", "text"]
-    ).write.parquet(bench_path)
-    rc = main([
-        "corpus-etl", "--docs", docs_path, "--benchmark", bench_path,
-        "--budget", "40", "--out", out,
-    ])
-    assert rc == 0
-    got = spark.read.parquet(out)
-    ids = {r.doc_id for r in got.collect()}
-    assert 50 not in ids and 51 not in ids and 7 in ids and len(ids) == 40
-    # split-partitioned layout on disk
-    assert any(d.startswith("split=") for d in os.listdir(out))
-    train = got.filter(F.col("split") == "train")
-    assert train.filter(F.col("shard").isNull()).count() == 0
 
 
 def _make_fake_open_dataset():

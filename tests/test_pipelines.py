@@ -57,6 +57,32 @@ def test_gridmet_time_filter(spark, grid, weights):
     assert days == ["1980-01-02", "1980-01-03"]
 
 
+@pytest.mark.parametrize("pipeline", ["gridmet", "cfsv2_median", "cfsv2_ensemble"])
+@pytest.mark.parametrize(
+    "dates, match",
+    [
+        (dict(start_date="1980-01-02"), "go together"),
+        (dict(end_date="1980-01-03"), "go together"),
+        (dict(start_date="1980-01-03", end_date="1980-01-02"), "is after"),
+    ],
+    ids=["start_only", "end_only", "reversed"],
+)
+def test_pipelines_reject_bad_date_range(
+    spark, grid, weights, grid_ens, weights_ens, elevation, pipeline, dates, match
+):
+    """A one-sided range would silently keep every landed day and a reversed
+    one none; every pipeline raises while it is built, before any job."""
+    build = {
+        "gridmet": lambda: gridmet_pipeline(grid, weights, **dates),
+        "cfsv2_median": lambda: cfsv2_median_pipeline(grid_ens, weights_ens, elevation, **dates),
+        "cfsv2_ensemble": lambda: cfsv2_ensemble_pipeline(
+            grid_ens, weights_ens, elevation, **dates
+        ),
+    }[pipeline]
+    with pytest.raises(ValueError, match=match):
+        build()
+
+
 def test_cfsv2_median_pipeline_golden(spark, grid_ens, weights_ens, elevation, fixdir):
     res = cfsv2_median_pipeline(grid_ens, weights_ens, elevation).toPandas()
     assert sorted(res.columns) == sorted(["feature_id", "time", "tmax", "tmin", "prcp", "humidity"])

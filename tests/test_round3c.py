@@ -402,29 +402,6 @@ def test_fuzzy_join_zero_distance_is_exact_equality(spark):
     assert got == {(1, 2)}
 
 
-def test_corpus_pipeline_v2_recipe_semantics(spark):
-    """The v2 manifest respects every gate: no benchmark leakage, quality
-    and length cuts hold, per-source admitted tokens stay within quota,
-    train shards are budget-packed."""
-    from offpath_queries.contract_ext3 import (
-        _V2_MIN_TOKENS,
-        _V2_NLL_CUT,
-        _V2_SOURCE_BUDGET,
-        q_corpus_pipeline_v2,
-    )
-
-    out = q_corpus_pipeline_v2(spark, "/root/testdata/sf0.001").collect()
-    assert len(out) > 0
-    per_source = {}
-    for r in out:
-        assert r.nll <= _V2_NLL_CUT
-        assert r.n_tokens >= _V2_MIN_TOKENS
-        assert r.split in ("train", "val", "test")
-        assert (r.shard is not None) == (r.split == "train")
-        per_source[r.source] = per_source.get(r.source, 0) + r.n_tokens
-    assert all(v <= _V2_SOURCE_BUDGET for v in per_source.values())
-
-
 def test_lsh_recall_query_reports_sane_metrics(spark):
     from offpath_queries.contract_ext3 import q_lsh_recall
 

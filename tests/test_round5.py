@@ -154,51 +154,6 @@ def test_mixture_weights_size_col(spark):
 
 
 # ---------------------------------------------------------------------------
-# corpus_pipeline_v3
-# ---------------------------------------------------------------------------
-
-
-def test_corpus_v3_invariants(spark):
-    """Canonical-only manifest, per-source share_temp constant and summing
-    to 1, n_members ≥ 1, token counts consistent with kept lines."""
-    from offpath_queries.contract_ext8 import q_corpus_pipeline_v3
-
-    out = q_corpus_pipeline_v3(spark, SF_DIR).collect()
-    assert len(out) > 0
-    ids = [r.doc_id for r in out]
-    assert len(ids) == len(set(ids))
-    shares = {}
-    for r in out:
-        assert r.n_members >= 1
-        assert 0 < r.n_kept <= r.n_lines
-        assert r.split in ("train", "val", "test")
-        shares[r.source] = r.share_temp
-    assert abs(sum(shares.values()) - 1.0) < 1e-4
-
-
-def test_corpus_v3_drops_boilerplate_and_clones(spark):
-    """Hand corpus: doc 2 is a clone of doc 1 (exact dedup), doc 3 is all
-    boilerplate (gate), doc 4 is a near-dup of doc 1 (LSH cluster), doc 5
-    is independent — manifest keeps 1 (n_members 2) and 5."""
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline_v3
-
-    b = "common header line"
-    d1 = f"{b}\nthe quick brown fox jumps over the lazy dog\nunique tail one"
-    # d4 shares NO exact line with d1 (line dedup runs first!) but is
-    # shingle-near-identical post-dedup → LSH folds it into d1's cluster
-    d4 = f"{b} z\nthe quick brown fox jumps over the lazy dogz\nunique tail onez"
-    d5 = f"{b}\ncompletely different content about shuffle exchanges here"
-    rows = [(1, "a", d1), (2, "a", d1), (3, "b", b), (4, "a", d4), (5, "b", d5)]
-    docs = spark.createDataFrame(rows, ["doc_id", "source", "text"])
-    out = {r.doc_id: r for r in corpus_pipeline_v3(docs, keep_num=1, keep_den=4).collect()}
-    assert set(out) == {1, 5}
-    assert out[1].n_members == 2  # doc 4 folded in as a near-dup
-    assert out[1].n_lines == 3 and out[1].n_kept == 3
-    # doc 5 lost its boilerplate header line (dup of doc 1's) but survived
-    assert out[5].n_kept == 1 and out[5].n_lines == 2
-
-
-# ---------------------------------------------------------------------------
 # jl_project / tfidf_topk_terms
 # ---------------------------------------------------------------------------
 

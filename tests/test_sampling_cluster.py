@@ -116,32 +116,6 @@ def test_dedup_clusters_singletons_and_canonicals(spark):
     assert sum(1 for c, canon in out.values() if canon) == 6
 
 
-def test_corpus_pipeline_end_to_end(spark):
-    """Each stage provably acts: dupes collapse to lowest id, benchmark
-    overlaps are dropped, every survivor gets a split, train gets shards."""
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline
-
-    rows = [(i, f"unique document number {i} with some filler text") for i in range(50)]
-    rows += [(100, "A duplicated   doc"), (101, "a duplicated doc")]  # dup after clean+lower
-    rows += [(102, "the contaminated benchmark passage")]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    bench = spark.createDataFrame(
-        [(999, "THE contaminated benchmark passage")], ["doc_id", "text"]
-    )
-    out = corpus_pipeline(docs, bench, budget=30, group_width=10)
-    got = {r.doc_id: r for r in out.collect()}
-    assert 101 not in got and 100 in got  # dedup keeps lowest id
-    assert 102 not in got  # decontaminated (case-insensitive)
-    assert len(got) == 51
-    assert all(r.split in ("train", "val", "test") for r in got.values())
-    train = [r for r in got.values() if r.split == "train"]
-    assert train and all(r.shard is not None for r in train)
-    assert all(r.shard is None for r in got.values() if r.split != "train")
-    # shard indices are contiguous from 0
-    shards = sorted({r.shard for r in train})
-    assert shards == list(range(len(shards)))
-
-
 def test_mixture_sample_quotas_and_determinism(spark, docs):
     from gridmet_etl_spark.operators.sampling import mixture_sample
 
@@ -156,24 +130,6 @@ def test_mixture_sample_quotas_and_determinism(spark, docs):
     a = {r.doc_id for r in out.collect()}
     b = {r.doc_id for r in mixture_sample(docs, "grp", mix).collect()}
     assert a == b
-
-
-def test_pack_sequences_order_and_budget(spark):
-    from gridmet_etl_spark.plans.corpus import corpus_pipeline, pack_sequences
-
-    rows = [(i, f"doc {i} word word word") for i in range(30)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    bench = spark.createDataFrame([(99, "nothing shared here at all")], ["doc_id", "text"])
-    manifest = corpus_pipeline(docs, bench, budget=20, group_width=7)
-    out = pack_sequences(docs, manifest, sep=" | ")
-    seqs = {r.shard: r for r in out.collect()}
-    # docs within each sequence appear in ascending id order
-    for r in seqs.values():
-        ids = [int(p.split()[1]) for p in r.seq_text.split(" | ")]
-        assert ids == sorted(ids) and r.n_docs == len(ids)
-    # every train doc lands in exactly one sequence
-    n_train = manifest.filter("split = 'train'").count()
-    assert sum(r.n_docs for r in seqs.values()) == n_train
 
 
 def test_connected_components_raises_when_not_converged(spark):
