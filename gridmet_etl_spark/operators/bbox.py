@@ -195,259 +195,3 @@ def time_filter(
     if datetime.strptime(start_date, "%Y-%m-%d") > datetime.strptime(end_date, "%Y-%m-%d"):
         raise ValueError(f"start_date {start_date} is after end_date {end_date}")
     return grid.filter(F.col("time").between(F.lit(start_date), F.lit(end_date)))
-
-
-def coarsen_grid(
-    grid: DataFrame,
-    factor: int = 2,
-    keys: tuple[str, ...] = ("var", "ens", "time"),
-    value_col: str = "value",
-) -> DataFrame:
-    """Spatial regrid-by-aggregation: collapse each ``factor × factor``
-    block of cells to its mean (the standard downsample step before
-    coarse-resolution analysis or visualization; the reference's regrid
-    path delegates to xarray coarsen-like slicing, etl.py:273-281 dims).
-
-    One shuffle keyed (keys…, ci, cj) with map-side partial aggregation —
-    shuffle volume is output-sized (input/factor²). NULLs (missing cells)
-    are excluded per Spark/SQL avg semantics; ``n_cells`` exposes the
-    divisor so a coverage-weighted consumer can re-weight.
-
-    Output: (keys…, ci, cj, mean_value, n_cells).
-    """
-    ci = F.floor(F.col("i") / factor).cast("int").alias("ci")
-    cj = F.floor(F.col("j") / factor).cast("int").alias("cj")
-    return (
-        grid.groupBy(*[F.col(k) for k in keys], ci, cj)
-        .agg(
-            F.round(F.avg(value_col), 6).alias("mean_value"),
-            F.count(value_col).alias("n_cells"),
-        )
-    )
-
-
-def focal_mean(
-    grid: DataFrame,
-    radius: int = 1,
-    keys: tuple[str, ...] = ("var", "ens", "time"),
-    value_col: str = "value",
-) -> DataFrame:
-    """Focal (neighborhood) mean: each cell's value averaged with its
-    (2r+1)² spatial neighbors — the raster smoothing / focal-statistics
-    primitive (xarray ``rolling(i=..., j=...).mean()`` analogue).
-
-    SCATTER formulation, not a self-join: every cell emits one
-    contribution row per neighborhood it belongs to (explode over the
-    (2r+1)² offsets — row-local), then ONE shuffle keyed
-    (keys…, ti, tj) partial-aggregates the sums. A join formulation would
-    shuffle the grid twice and build a hash table per partition; the
-    scatter's explode factor is the fixed 9 (r=1) and the shuffle volume
-    is 9× cell count of (key, sum, count) partials — map-side combine
-    collapses them before the wire. Edge cells average over their
-    existing neighbors (``n_nbrs`` exposes the divisor); halo targets
-    outside the grid are dropped by the final semi-join against the real
-    cell set (broadcast — the distinct (i, j) relation is raster-sized,
-    ~810k cells in the reference domain).
-
-    Output: (keys…, i, j, focal_value, n_nbrs).
-    """
-    offs = [
-        F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-        for di in range(-radius, radius + 1)
-        for dj in range(-radius, radius + 1)
-    ]
-    contrib = grid.select(
-        *[F.col(k) for k in keys],
-        F.explode(F.array(*offs)).alias("_o"),
-        F.col("i"),
-        F.col("j"),
-        F.col(value_col),
-    ).select(
-        *[F.col(k) for k in keys],
-        (F.col("i") + F.col("_o.di")).alias("ti"),
-        (F.col("j") + F.col("_o.dj")).alias("tj"),
-        F.col(value_col),
-    )
-    agg = contrib.groupBy(*[F.col(k) for k in keys], "ti", "tj").agg(
-        F.round(F.avg(value_col), 6).alias("focal_value"),
-        F.count(value_col).alias("n_nbrs"),
-    )
-    cells = grid.select(F.col("i").alias("ti"), F.col("j").alias("tj")).distinct()
-    return agg.join(F.broadcast(cells), ["ti", "tj"], "left_semi").select(
-        *keys,
-        F.col("ti").alias("i"),
-        F.col("tj").alias("j"),
-        "focal_value",
-        "n_nbrs",
-    )
-
-
-def bilinear_interpolate(
-    grid: DataFrame,
-    points: DataFrame,
-    y1: float,
-    x1: float,
-    res: float,
-    keys: tuple[str, ...] = ("var", "time"),
-    value_col: str = "value",
-) -> DataFrame:
-    """Bilinear interpolation of the gridded field to point locations —
-    the point-sampling alternative to area-weight aggregation (the
-    reference's grid→polygon path; stations/points want this form).
-
-    Geometry: fractional cell coords fi = (y1 − lat)/res (descending-lat
-    convention, bounds_to_cells), fj = (lon − x1)/res. Each point scatters
-    to its 4 surrounding corners with weights (1−di)(1−dj) etc — a
-    row-local explode on the POINT side (|points| × 4 rows, broadcast);
-    the grid is probed by an equi-join on (i, j) and never shuffles.
-    Missing corners (edge/NULL cells) renormalize by the present weight
-    mass. One output-sized aggregation keyed (feature, keys…).
-
-    Output: (feature_id, keys…, interp_value, w_mass).
-    """
-    fi = (F.lit(y1) - F.col("lat")) / F.lit(res)
-    fj = (F.col("lon") - F.lit(x1)) / F.lit(res)
-    corners = [
-        F.struct(F.lit(a).alias("da"), F.lit(b).alias("db"))
-        for a in (0, 1)
-        for b in (0, 1)
-    ]
-    pts = (
-        points.select(
-            "feature_id",
-            F.floor(fi).cast("int").alias("i0"),
-            F.floor(fj).cast("int").alias("j0"),
-            (fi - F.floor(fi)).alias("di"),
-            (fj - F.floor(fj)).alias("dj"),
-        )
-        .select(
-            "feature_id",
-            F.explode(F.array(*corners)).alias("_c"),
-            "i0", "j0", "di", "dj",
-        )
-        .select(
-            "feature_id",
-            (F.col("i0") + F.col("_c.da")).alias("i"),
-            (F.col("j0") + F.col("_c.db")).alias("j"),
-            (
-                (1 - F.abs(F.col("di") - F.col("_c.da")))
-                * (1 - F.abs(F.col("dj") - F.col("_c.db")))
-            ).alias("w"),
-        )
-    )
-    joined = grid.join(F.broadcast(pts), ["i", "j"])
-    v = F.col(value_col)
-    return (
-        joined.groupBy("feature_id", *[F.col(k) for k in keys])
-        .agg(
-            F.round(
-                F.sum(F.col("w") * v) / F.sum(F.when(v.isNotNull(), F.col("w"))), 6
-            ).alias("interp_value"),
-            F.round(F.sum(F.when(v.isNotNull(), F.col("w"))), 6).alias("w_mass"),
-        )
-    )
-
-
-def field_gradient(
-    grid: DataFrame,
-    keys: tuple[str, ...] = ("var", "ens", "time"),
-    value_col: str = "value",
-) -> DataFrame:
-    """Central-difference gradient of a gridded field: ∂v/∂j (x / east),
-    ∂v/∂i (y / north), magnitude, and aspect (atan2(dy, dx)) per cell —
-    the terrain-slope / thermal-gradient primitive.
-
-    Same SCATTER shape as ``focal_mean``: each cell emits 4 tagged
-    contribution rows (to its N/S/E/W neighbors — row-local explode), ONE
-    partial-agg shuffle reassembles each target cell's stencil via
-    conditional MAX. Interior cells only (all four neighbors present);
-    no self-joins, shuffle volume is 4× cells of constant-width partials.
-
-    Output: (keys…, i, j, dx, dy, grad_mag, aspect).
-    """
-    offs = [
-        # (di, dj, role): the neighbor AT (i+di, j+dj) receives this cell's
-        # value tagged with the role it plays in THAT cell's stencil
-        (0, 1, "w"),   # cell scatters east -> serves as target's west value
-        (0, -1, "e"),
-        (1, 0, "s"),   # cell scatters north (i+1) -> target's south value
-        (-1, 0, "n"),
-    ]
-    contrib = grid.select(
-        *[F.col(k) for k in keys],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(di).alias("di"), F.lit(dj).alias("dj"), F.lit(role).alias("role")
-                    )
-                    for di, dj, role in offs
-                ]
-            )
-        ).alias("_o"),
-        "i",
-        "j",
-        F.col(value_col).alias("v"),
-    ).select(
-        *[F.col(k) for k in keys],
-        (F.col("i") + F.col("_o.di")).alias("ti"),
-        (F.col("j") + F.col("_o.dj")).alias("tj"),
-        F.col("_o.role").alias("role"),
-        "v",
-    )
-    stencil = contrib.groupBy(*[F.col(k) for k in keys], "ti", "tj").agg(
-        F.max(F.when(F.col("role") == "w", F.col("v"))).alias("vw"),
-        F.max(F.when(F.col("role") == "e", F.col("v"))).alias("ve"),
-        F.max(F.when(F.col("role") == "s", F.col("v"))).alias("vs"),
-        F.max(F.when(F.col("role") == "n", F.col("v"))).alias("vn"),
-        F.count("*").alias("_n"),
-    )
-    # + 0.0 everywhere a rounded value can be tiny-negative: engines round
-    # to -0.0 vs +0.0 differently (the spi_index lesson); for atan2 the
-    # zero-sign normalization must happen BEFORE the call (atan2(-0.0, x<0)
-    # is -pi but atan2(+0.0, x<0) is +pi)
-    dx = (F.col("ve") - F.col("vw")) / 2.0 + F.lit(0.0)
-    dy = (F.col("vn") - F.col("vs")) / 2.0 + F.lit(0.0)
-    return (
-        stencil.where(F.col("_n") == 4)  # interior: full 4-point stencil
-        .select(
-            *[F.col(k) for k in keys],
-            F.col("ti").alias("i"),
-            F.col("tj").alias("j"),
-            (F.round(dx, 6) + F.lit(0.0)).alias("dx"),
-            (F.round(dy, 6) + F.lit(0.0)).alias("dy"),
-            F.round(F.sqrt(dx * dx + dy * dy), 6).alias("grad_mag"),
-            (F.round(F.atan2(dy, dx), 6) + F.lit(0.0)).alias("aspect"),
-        )
-    )
-
-
-def hex_bin(
-    df: DataFrame,
-    size: float,
-    x_col: str = "lon",
-    y_col: str = "lat",
-) -> DataFrame:
-    """Axial hexagonal bin ids (pointy-top, circumradius ``size``) for each
-    row — the standard equal-area-ish spatial rollup key (H3-style
-    indexing reduced to its planar core). Appends (hq, hr) axial integer
-    coordinates via cube rounding; group by them for hex density maps.
-
-    Pure Column arithmetic inside codegen (fractional axial transform +
-    cube round with the max-deviation fixup), row-local — a scan-speed
-    key derivation at any corpus size, and the identical expression tree
-    runs in DuckDB for oracle parity (round-half boundaries have measure
-    zero for continuous coordinates)."""
-    x, y = F.col(x_col), F.col(y_col)
-    # sqrt (IEEE correctly-rounded) — NOT pow(x, 0.5), which is only
-    # 1-ulp-accurate and could diverge from the oracle's sqrt
-    qf = (F.sqrt(F.lit(3.0)) / 3.0 * x - y / 3.0) / F.lit(size)
-    rf = (2.0 / 3.0 * y) / F.lit(size)
-    sf = -qf - rf
-    rq, rr, rs = F.round(qf, 0), F.round(rf, 0), F.round(sf, 0)
-    dq, dr, ds = F.abs(rq - qf), F.abs(rr - rf), F.abs(rs - sf)
-    # cube-round fixup: recompute the axis with the largest rounding error
-    # from the other two so q + r + s = 0 stays exact
-    hq = F.when((dq > dr) & (dq > ds), -rr - rs).otherwise(rq)
-    hr = F.when(~((dq > dr) & (dq > ds)) & (dr > ds), -rq - rs).otherwise(rr)
-    return df.withColumn("hq", hq.cast("long")).withColumn("hr", hr.cast("long"))

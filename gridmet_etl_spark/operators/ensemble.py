@@ -21,15 +21,17 @@ def ensemble_median(grid_ens: DataFrame) -> DataFrame:
     """Exact median over the ensemble axis per (var, time, i, j) cell.
 
     Keeps lat/lon via first() (functionally dependent on i/j).
-    Reproduces `ds[key].median(dim="ens")` (etl.py:296-297); xarray's
-    median skips NaN by default only for skipna=True — the reference uses
-    the default (skipna=True for float dtypes), matching SQL median's
-    NULL-skipping.
+    Reproduces `ds[key].median(dim="ens")` (etl.py:296-297), whose default
+    skipna=True (float dtypes) skips NaN members. SQL median skips NULL but
+    sorts NaN above every number, so NaN is nulled first: ingest maps
+    NaN→NULL only by convention (as ``weighted_agg._is_missing`` notes),
+    and an all-NaN cell's median is NULL.
     """
+    v = F.col("value")
     return grid_ens.groupBy("var", "time", "i", "j").agg(
         F.first("lat").alias("lat"),
         F.first("lon").alias("lon"),
-        F.median("value").alias("value"),
+        F.median(F.when(~F.isnan(v), v)).alias("value"),
     )
 
 

@@ -394,7 +394,7 @@ def ewma_truncated(
     keeps 75% of the untruncated mass. Plan: a range-bounded self-join on
     day distance (≤ W-row fan-out per row, pipelined) then one
     partially-aggregated shuffle keyed (series, day) — output-sized, the
-    same shape as the focal/rolling operators.
+    same shape as the rolling operators.
     """
     keys = list(keys)
     base = df.select(

@@ -306,49 +306,3 @@ def export_netcdf_classic(
         global_attrs={"Conventions": "CF-1.8", "featureType": "timeSeries"},
     )
     return path
-
-
-def write_curve_clustered(
-    df: DataFrame,
-    path: str,
-    i_col: str = "i",
-    j_col: str = "j",
-    bits: int = 6,
-    curve: str = "hilbert",
-    n_files: int | None = None,
-    target_mb: int = 128,
-    mode: str = "overwrite",
-) -> str:
-    """Space-filling-curve clustered write: key every row by Hilbert
-    (default — no Z-jumps, measured ≥ Morton prune rates in
-    curve_compare) or Morton order and write DISJOINT curve-key ranges,
-    so parquet footer min/max on (i, j) prunes bbox scans at the FILE
-    level — the physical realization of the zone-map simulations in
-    operators/planner.py.
-
-    The curve key column ``_ck`` is kept in the output: it is the table's
-    clustering key (later compactions re-sort by it without recomputing,
-    and range predicates on it are file-pruned directly).
-
-    ``n_files`` pins an exact file count (tests, small extracts);
-    production leaves it None and lets write_sized's AQE advisory size
-    choose (~``target_mb`` per file)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.scale import hilbert_key_stages, zorder_key
-
-    if curve == "hilbert":
-        keyed = hilbert_key_stages(df, i_col, j_col, bits=bits, out_col="_ck")
-    elif curve == "zorder":
-        keyed = df.withColumn("_ck", zorder_key(i_col, j_col, bits=bits))
-    else:
-        raise ValueError(f"unknown curve {curve!r} (hilbert|zorder)")
-    if n_files is not None:
-        (
-            keyed.repartitionByRange(n_files, F.col("_ck"))
-            .sortWithinPartitions("_ck")
-            .write.mode(mode)
-            .parquet(path)
-        )
-        return path
-    return write_sized(keyed, path, target_mb=target_mb, sort_cols=("_ck",), mode=mode)

@@ -2060,29 +2060,6 @@ SELECT o_orderkey, change FROM diff WHERE change IS NOT NULL
 """
 
 
-def q_coarsen_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial regrid: 2×2 cell-block means over the ensemble grid fixture
-    — one output-sized shuffle with map-side partial agg."""
-    from .contract import FIXDIR
-    from gridmet_etl_spark.operators.bbox import coarsen_grid
-    from gridmet_etl_spark.sources.readers import read_grid
-
-    grid = read_grid(spark, os.path.join(FIXDIR, "grid_ens.parquet"))
-    return coarsen_grid(grid, factor=2)
-
-
-def _sql_coarsen_grid() -> str:
-    from .contract import FIXDIR
-
-    path = os.path.join(FIXDIR, "grid_ens.parquet")
-    return f"""
-SELECT var, ens, time, CAST(i // 2 AS INTEGER) AS ci, CAST(j // 2 AS INTEGER) AS cj,
-       ROUND(avg(value), 6) AS mean_value, count(value) AS n_cells
-FROM read_parquet('{path}')
-GROUP BY var, ens, time, ci, cj
-"""
-
-
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton write-layout keys for the distinct grid cells — the
     clustering key that makes bbox predicates touch O(few) row groups."""
@@ -2156,32 +2133,6 @@ ranked AS (
   FROM counts)
 SELECT window_start, event_type, n, CAST(rank AS INTEGER) AS rank
 FROM ranked WHERE rank <= 3
-"""
-
-
-def q_focal_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3×3 focal mean over the grid fixture (scatter formulation — one
-    output-sized shuffle, no self-join)."""
-    from .contract import FIXDIR
-    from gridmet_etl_spark.operators.bbox import focal_mean
-    from gridmet_etl_spark.sources.readers import read_grid
-
-    grid = read_grid(spark, os.path.join(FIXDIR, "grid.parquet"))
-    return focal_mean(grid, radius=1, keys=("var", "time"))
-
-
-def _sql_focal_mean() -> str:
-    from .contract import FIXDIR
-
-    path = os.path.join(FIXDIR, "grid.parquet")
-    return f"""
-WITH g AS (SELECT var, time, i, j, value FROM read_parquet('{path}'))
-SELECT a.var, a.time, a.i, a.j,
-       ROUND(avg(b.value), 6) AS focal_value, count(b.value) AS n_nbrs
-FROM g a JOIN g b
-  ON a.var = b.var AND a.time = b.time
- AND abs(a.i - b.i) <= 1 AND abs(a.j - b.j) <= 1
-GROUP BY a.var, a.time, a.i, a.j
 """
 
 
@@ -2325,46 +2276,6 @@ FROM m
 """
 
 
-def q_bilinear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bilinear point sampling of the grid at the 50 feature locations
-    (scatter-4-corners on the broadcast point side; grid never shuffles)."""
-    from .contract import FIXDIR
-    from gridmet_etl_spark.fixtures import RES, X1, Y1
-    from gridmet_etl_spark.operators.bbox import bilinear_interpolate
-    from gridmet_etl_spark.sources.readers import read_grid
-
-    grid = read_grid(spark, os.path.join(FIXDIR, "grid.parquet"))
-    pts = spark.read.parquet(os.path.join(FIXDIR, "features.parquet"))
-    return bilinear_interpolate(grid, pts, y1=Y1, x1=X1, res=RES)
-
-
-def _sql_bilinear_interp() -> str:
-    from .contract import FIXDIR
-    from gridmet_etl_spark.fixtures import RES, X1, Y1
-
-    gpath = os.path.join(FIXDIR, "grid.parquet")
-    fpath = os.path.join(FIXDIR, "features.parquet")
-    return f"""
-WITH p AS (
-  SELECT feature_id,
-         CAST(floor(({Y1} - lat) / {RES}) AS INTEGER) AS i0,
-         CAST(floor((lon - {X1}) / {RES}) AS INTEGER) AS j0,
-         ({Y1} - lat) / {RES} - floor(({Y1} - lat) / {RES}) AS di,
-         (lon - {X1}) / {RES} - floor((lon - {X1}) / {RES}) AS dj
-  FROM read_parquet('{fpath}')),
-corners AS (
-  SELECT feature_id, i0 + c.da AS i, j0 + c.db AS j,
-         (1 - abs(di - c.da)) * (1 - abs(dj - c.db)) AS w
-  FROM p, (VALUES (0, 0), (0, 1), (1, 0), (1, 1)) c(da, db))
-SELECT c.feature_id, g.var, g.time,
-       ROUND(sum(c.w * g.value)
-             / sum(CASE WHEN g.value IS NOT NULL THEN c.w END), 6) AS interp_value,
-       ROUND(sum(CASE WHEN g.value IS NOT NULL THEN c.w END), 6) AS w_mass
-FROM read_parquet('{gpath}') g JOIN corners c ON g.i = c.i AND g.j = c.j
-GROUP BY c.feature_id, g.var, g.time
-"""
-
-
 def q_degree_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly heating/cooling degree days per cell from tmmx/tmmn (K→°C
     at the edge; conditional-agg pairing, no self-join)."""
@@ -2397,43 +2308,6 @@ SELECT i, j, month,
        ROUND(sum(greatest(t - 18.3, 0.0)), 6) AS cdd,
        count(*) AS n_days
 FROM daily GROUP BY i, j, month
-"""
-
-
-def q_climate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship climate composition: anomaly → per-cell OLS trend →
-    3×3 focal smoothing, one DAG, every shuffle |cells|-sized."""
-    from .contract import FIXDIR
-    from gridmet_etl_spark.plans.climate import climate_pipeline
-    from gridmet_etl_spark.sources.readers import read_grid
-
-    grid = read_grid(spark, os.path.join(FIXDIR, "grid.parquet"))
-    return climate_pipeline(grid, var="tmmx")
-
-
-def _sql_climate_pipeline() -> str:
-    from .contract import FIXDIR
-
-    path = os.path.join(FIXDIR, "grid.parquet")
-    return f"""
-WITH sel AS (
-  SELECT i, j, time, value FROM read_parquet('{path}') WHERE var = 'tmmx'),
-anom AS (
-  SELECT i, j, time, value - avg(value) OVER (PARTITION BY i, j) AS anomaly
-  FROM sel),
-trend AS (
-  SELECT i, j,
-         ROUND(regr_slope(anomaly,
-               CAST(date_diff('day', DATE '1970-01-01', time) AS DOUBLE)), 6)
-           AS slope
-  FROM anom GROUP BY i, j),
-smooth AS (
-  SELECT a.i, a.j, ROUND(avg(b.slope), 6) AS trend_smooth,
-         count(b.slope) AS n_nbrs
-  FROM trend a JOIN trend b
-    ON abs(a.i - b.i) <= 1 AND abs(a.j - b.j) <= 1
-  GROUP BY a.i, a.j)
-SELECT i, j, trend_smooth, n_nbrs FROM smooth
 """
 
 
@@ -2929,8 +2803,8 @@ FROM scored GROUP BY event_type
 def q_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct active users per day — windowed
     countDistinct doesn't exist, so each (user, day) presence SCATTERS to
-    the 7 report days it supports (row-local explode of day offsets, the
-    focal-mean trick on the time axis) and one groupBy counts distinct
+    the 7 report days it supports (row-local explode of day offsets) and
+    one groupBy counts distinct
     users per report day. Presence relation is |users|×|days| bounded;
     nothing corpus-sized shuffles twice."""
     from gridmet_etl_spark.sources.readers import read_events
@@ -3155,17 +3029,13 @@ EXT_QUERIES = {
     "skew_join": (q_skew_join, SQL_SKEW_JOIN),
     "set_ops": (q_set_ops, SQL_SET_OPS),
     "grouping_sets": (q_grouping_sets, SQL_GROUPING_SETS),
-    "climate_pipeline": (q_climate_pipeline, _sql_climate_pipeline()),
     "degree_days": (q_degree_days, _sql_degree_days()),
-    "bilinear_interp": (q_bilinear_interp, _sql_bilinear_interp()),
     "token_drift": (q_token_drift, SQL_TOKEN_DRIFT),
     "readability": (q_readability, SQL_READABILITY),
     "trend_slope": (q_trend_slope, _sql_trend_slope()),
     "cross_correlation": (q_cross_correlation, _sql_cross_correlation()),
-    "focal_mean": (q_focal_mean, _sql_focal_mean()),
     "topk_per_source": (q_topk_per_source, SQL_TOPK_PER_SOURCE),
     "trending_topk": (q_trending_topk, SQL_TRENDING_TOPK),
-    "coarsen_grid": (q_coarsen_grid, _sql_coarsen_grid()),
     "zorder_layout": (q_zorder_layout, _sql_zorder_layout()),
     "media_dedup": (q_media_dedup, _sql_media_dedup()),
     "funnel_steps": (q_funnel_steps, SQL_FUNNEL_STEPS),

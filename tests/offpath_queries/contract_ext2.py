@@ -829,48 +829,8 @@ FROM pred WHERE rn = 1 GROUP BY qlabel, predicted
 
 
 # ---------------------------------------------------------------------------
-# Field gradient + seasonal decomposition
+# Seasonal decomposition
 # ---------------------------------------------------------------------------
-
-_GRAD_DAY = "1980-01-03"
-
-
-def q_terrain_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Central-difference gradient of one day's tmmx field
-    (operators/bbox.py::field_gradient — scatter stencil, one partial-agg
-    shuffle, interior cells only)."""
-    from gridmet_etl_spark.operators.bbox import field_gradient
-
-    g = _fx_grid(spark).where(
-        (F.col("var") == "tmmx") & (F.col("time") == F.lit(_GRAD_DAY))
-    )
-    out = field_gradient(g, keys=("var", "time"))
-    return out.select("i", "j", "dx", "dy", "grad_mag", "aspect")
-
-
-def _sql_terrain_gradient() -> str:
-    from .contract import FX
-
-    return f"""
-WITH f AS (
-  SELECT i, j, value FROM '{FX["grid"]}'
-  WHERE var = 'tmmx' AND time = DATE '{_GRAD_DAY}'),
-st AS (
-  SELECT c.i, c.j,
-         (e.value - w.value) / 2.0 + 0.0 AS dx,
-         (n.value - s.value) / 2.0 + 0.0 AS dy
-  FROM f c
-  JOIN f e ON e.i = c.i AND e.j = c.j + 1
-  JOIN f w ON w.i = c.i AND w.j = c.j - 1
-  JOIN f n ON n.i = c.i + 1 AND n.j = c.j
-  JOIN f s ON s.i = c.i - 1 AND s.j = c.j)
-SELECT i, j,
-       ROUND(dx, {R}) + 0.0 AS dx,
-       ROUND(dy, {R}) + 0.0 AS dy,
-       ROUND(sqrt(dx * dx + dy * dy), {R}) AS grad_mag,
-       ROUND(atan2(dy, dx), {R}) + 0.0 AS aspect
-FROM st
-"""
 
 
 def q_seasonal_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1184,7 +1144,6 @@ EXT2_QUERIES = {
     "ks_test": (q_ks_test, SQL_KS_TEST),
     "auc_eval": (q_auc_eval, SQL_AUC_EVAL),
     "temporal_split": (q_temporal_split, SQL_TEMPORAL_SPLIT),
-    "terrain_gradient": (q_terrain_gradient, _sql_terrain_gradient()),
     "seasonal_decomp": (q_seasonal_decomp, SQL_SEASONAL_DECOMP),
     "centroid_classify": (q_centroid_classify, SQL_CENTROID_CLASSIFY),
     "knn_eval": (q_knn_eval, SQL_KNN_EVAL),

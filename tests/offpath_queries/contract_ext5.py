@@ -739,59 +739,6 @@ GROUP BY o_custkey
 """
 
 
-from .contract import FX  # noqa: E402  (fixture paths for oracle SQL)
-
-
-# ---------------------------------------------------------------------------
-# hex_density: axial hexagonal binning rollup (H3-style planar core)
-# ---------------------------------------------------------------------------
-
-_HEX_SIZE = 0.08
-_TWO_THIRDS = 2.0 / 3.0  # Python double, injected verbatim into the oracle
-
-
-def q_hex_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hexagonal density map of the tmmx grid field: cube-rounded axial
-    hex ids (operators/bbox.py:hex_bin — row-local codegen arithmetic)
-    → per-hex cell count and mean value. The one shuffle is |hexes|-sized."""
-    from gridmet_etl_spark.operators.bbox import hex_bin
-
-    g = _pq(spark, FX["grid"]).where(F.col("var") == "tmmx")
-    b = hex_bin(g, size=_HEX_SIZE)
-    return b.groupBy("hq", "hr").agg(
-        F.count("*").alias("n_cells"),
-        F.count("value").alias("n_obs"),
-        F.round(F.avg("value"), R).alias("mean_val"),
-    )
-
-
-SQL_HEX_DENSITY = f"""
-WITH h AS (
-  SELECT value,
-         (sqrt(CAST(3.0 AS DOUBLE)) / CAST(3.0 AS DOUBLE) * lon - lat / CAST(3.0 AS DOUBLE))
-           / CAST({_HEX_SIZE!r} AS DOUBLE) AS qf,
-         (CAST({_TWO_THIRDS!r} AS DOUBLE) * lat) / CAST({_HEX_SIZE!r} AS DOUBLE) AS rf
-  FROM '{FX["grid"]}' WHERE var = 'tmmx'),
-r AS (
-  SELECT value, qf, rf, -qf - rf AS sf,
-         round(qf) AS rq, round(rf) AS rr, round(-qf - rf) AS rs
-  FROM h),
-fixed AS (
-  SELECT value,
-         CASE WHEN abs(rq - qf) > abs(rr - rf) AND abs(rq - qf) > abs(rs - sf)
-              THEN -rr - rs ELSE rq END AS hq,
-         CASE WHEN NOT (abs(rq - qf) > abs(rr - rf) AND abs(rq - qf) > abs(rs - sf))
-                   AND abs(rr - rf) > abs(rs - sf)
-              THEN -rq - rs ELSE rr END AS hr
-  FROM r)
-SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-       CAST(count(*) AS BIGINT) AS n_cells,
-       CAST(count(value) AS BIGINT) AS n_obs,
-       ROUND(avg(value), {R}) AS mean_val
-FROM fixed GROUP BY hq, hr
-"""
-
-
 # ---------------------------------------------------------------------------
 # quantile_normalize: cross-source distribution alignment
 # ---------------------------------------------------------------------------
@@ -1150,7 +1097,6 @@ EXT5_QUERIES = {
     "max_dup_spans": (q_max_dup_spans, SQL_MAX_DUP_SPANS),
     "calibration_eval": (q_calibration_eval, SQL_CALIBRATION_EVAL),
     "incremental_refresh": (q_incremental_refresh, SQL_INCREMENTAL_REFRESH),
-    "hex_density": (q_hex_density, SQL_HEX_DENSITY),
     "quantile_normalize": (q_quantile_normalize, SQL_QUANTILE_NORMALIZE),
     "cusum_changepoints": (q_cusum_changepoints, SQL_CUSUM_CHANGEPOINTS),
     "rolling_median": (q_rolling_median, SQL_ROLLING_MEDIAN),

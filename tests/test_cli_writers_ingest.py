@@ -28,9 +28,6 @@ CLI_MODULES = {
     "cli", "session", "schemas",
     "functions.physics", "functions.units",
     "operators.bbox", "operators.ensemble", "operators.fill", "operators.weighted_agg",
-    # only sources/writers.py::write_curve_clustered imports it, an off-path
-    # writer; it leaves this list together with that writer
-    "operators.scale",
     "plans.cfsv2", "plans.gridmet",
     "sources.geojson_micro", "sources.nc_micro", "sources.prms", "sources.proj_micro",
     "sources.readers", "sources.shp_micro", "sources.thredds", "sources.writers",
@@ -136,9 +133,9 @@ def test_cli_gridmet_fill_missing_writes_fill_map(spark, fixdir, tmp_path):
     ],
 )
 def test_cli_one_sided_date_range_exits_2(fixdir, tmp_path, capsys, command, inputs, bound):
-    """One date bound alone is rejected before any work: the pipelines
-    filter time only when both are given, so it would silently process
-    every landed day."""
+    """One date bound alone is rejected before any work: the pipelines'
+    time_filter raises on it too, but the CLI check makes the command exit
+    2 before a session starts."""
     args = [a if a.startswith("--") else os.path.join(fixdir, a) for a in inputs]
     out = tmp_path / "out"
     rc = main([command, *args, *bound, "--out", str(out)])

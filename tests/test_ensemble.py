@@ -38,6 +38,27 @@ def test_median_permutation_invariant(spark, grid_ens):
     assert joined.filter(F.abs(F.col("a") - F.col("b")) > 1e-12).count() == 0
 
 
+def test_median_skips_nan_members(spark):
+    """NaN members are skipped like NULL ones, as xarray's skipna median
+    is: (1, 2, NaN) and (1, 2, NULL) give 1.5, an all-NaN cell NULL."""
+    nan = float("nan")
+    cells = {0: [1.0, 2.0, nan], 1: [1.0, 2.0, None], 2: [nan, nan, nan]}
+    rows = [
+        ("tmmx", "1980-01-01", 0, j, 40.0, -100.0, ens, v)
+        for j, members in cells.items()
+        for ens, v in enumerate(members)
+    ]
+    df = spark.createDataFrame(
+        rows, "var string, time string, i int, j int, lat double, lon double, ens int, value double"
+    )
+    out = {r["j"]: r["value"] for r in ensemble_median(df).collect()}
+    # numpy's all-missing median is NaN (with a warning), Spark's NULL
+    with pytest.warns(RuntimeWarning, match="All-NaN"):
+        golden = {j: np.nanmedian(np.array(m, dtype=float)) for j, m in cells.items()}
+    assert out == {j: None if np.isnan(g) else g for j, g in golden.items()}
+    assert out[0] == out[1] == 1.5
+
+
 def test_concat_members_tags(spark, grid):
     base = grid.filter((F.col("var") == "pr") & (F.col("time") == F.lit("1980-01-01"))).drop("ens")
     out = concat_members([base, base, base])

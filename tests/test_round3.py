@@ -285,36 +285,6 @@ class TestSnapshotDiff:
 
 
 class TestCoarsenZorderMedia:
-    def test_coarsen_means(self, spark):
-        from gridmet_etl_spark.operators.bbox import coarsen_grid
-
-        rows = [
-            ("t", 0, "2024-01-01", i, j, float(i * 10 + j))
-            for i in range(4)
-            for j in range(4)
-        ]
-        df = spark.createDataFrame(
-            rows, "var string, ens int, time string, i int, j int, value double"
-        )
-        out = {
-            (r["ci"], r["cj"]): (r["mean_value"], r["n_cells"])
-            for r in coarsen_grid(df, factor=2).collect()
-        }
-        # block (0,0): cells (0,0),(0,1),(1,0),(1,1) -> mean of 0,1,10,11
-        assert out[(0, 0)] == (5.5, 4)
-        assert out[(1, 1)] == (27.5, 4)
-        assert len(out) == 4
-
-    def test_coarsen_skips_nulls(self, spark):
-        from gridmet_etl_spark.operators.bbox import coarsen_grid
-
-        df = spark.createDataFrame(
-            [("t", 0, "d", 0, 0, 2.0), ("t", 0, "d", 0, 1, None)],
-            "var string, ens int, time string, i int, j int, value double",
-        )
-        r = coarsen_grid(df, factor=2).collect()[0]
-        assert (r["mean_value"], r["n_cells"]) == (2.0, 1)
-
     def test_zorder_known_values(self, spark):
         from gridmet_etl_spark.operators.scale import zorder_key
 
@@ -361,35 +331,6 @@ class TestCoarsenZorderMedia:
 
 
 class TestFocalTopk:
-    def test_focal_mean_center_and_edges(self, spark):
-        from gridmet_etl_spark.operators.bbox import focal_mean
-
-        rows = [
-            ("t", "d", i, j, float(i * 3 + j)) for i in range(3) for j in range(3)
-        ]
-        df = spark.createDataFrame(rows, "var string, time string, i int, j int, value double")
-        out = {
-            (r["i"], r["j"]): (r["focal_value"], r["n_nbrs"])
-            for r in focal_mean(df, radius=1, keys=("var", "time")).collect()
-        }
-        # center cell (1,1): mean of all 9 = 4.0
-        assert out[(1, 1)] == (4.0, 9)
-        # corner (0,0): neighbors {0,1,3,4} -> mean 2.0 over 4 cells
-        assert out[(0, 0)] == (2.0, 4)
-        # no halo targets outside the grid
-        assert set(out) == {(i, j) for i in range(3) for j in range(3)}
-
-    def test_focal_mean_skips_null_values(self, spark):
-        from gridmet_etl_spark.operators.bbox import focal_mean
-
-        df = spark.createDataFrame(
-            [("t", "d", 0, 0, 6.0), ("t", "d", 0, 1, None)],
-            "var string, time string, i int, j int, value double",
-        )
-        out = {(r["i"], r["j"]): (r["focal_value"], r["n_nbrs"])
-               for r in focal_mean(df, keys=("var", "time")).collect()}
-        assert out == {(0, 0): (6.0, 1), (0, 1): (6.0, 1)}
-
     def test_topk_per_group(self, spark):
         from gridmet_etl_spark.operators.sampling import topk_per_group
 
@@ -464,48 +405,6 @@ class TestDriftReadability:
                df.select("doc_id", flesch_reading_ease("text").alias("f")).collect()}
         assert out[1] > 80          # short monosyllabic sentences read easy
         assert out[2] < out[1] - 50  # long polysyllabic one-sentence text reads hard
-
-
-class TestBilinear:
-    def test_linear_field_exact(self, spark):
-        """Bilinear interpolation reproduces a linear field exactly."""
-        from gridmet_etl_spark.operators.bbox import bilinear_interpolate
-
-        y1, x1, res = 10.0, 0.0, 1.0
-        cells = [
-            ("t", "d", i, j, y1 - i * res, x1 + j * res, 2.0 * i + 3.0 * j)
-            for i in range(4) for j in range(4)
-        ]
-        grid = spark.createDataFrame(
-            cells, "var string, time string, i int, j int, lat double, lon double, value double"
-        )
-        # point at fractional cell coords (fi, fj) = (1.25, 2.5)
-        pts = spark.createDataFrame(
-            [(7, y1 - 1.25 * res, x1 + 2.5 * res)], "feature_id long, lat double, lon double"
-        )
-        r = bilinear_interpolate(grid, pts, y1=y1, x1=x1, res=res).collect()[0]
-        assert r["interp_value"] == round(2.0 * 1.25 + 3.0 * 2.5, 6)
-        assert r["w_mass"] == 1.0
-
-    def test_cell_center_identity_and_missing_corner(self, spark):
-        from gridmet_etl_spark.operators.bbox import bilinear_interpolate
-
-        y1, x1, res = 10.0, 0.0, 1.0
-        cells = [("t", "d", 0, 0, 10.0, 0.0, 8.0), ("t", "d", 0, 1, 10.0, 1.0, None),
-                 ("t", "d", 1, 0, 9.0, 0.0, 4.0), ("t", "d", 1, 1, 9.0, 1.0, None)]
-        grid = spark.createDataFrame(
-            cells, "var string, time string, i int, j int, lat double, lon double, value double"
-        )
-        pts = spark.createDataFrame(
-            [(1, 10.0, 0.0), (2, 9.5, 0.5)], "feature_id long, lat double, lon double"
-        )
-        out = {r["feature_id"]: r for r in
-               bilinear_interpolate(grid, pts, y1=y1, x1=x1, res=res).collect()}
-        # point exactly on cell (0,0): identity
-        assert out[1]["interp_value"] == 8.0
-        # midpoint with the j=1 column missing: renormalized mean of 8, 4
-        assert out[2]["interp_value"] == 6.0
-        assert out[2]["w_mass"] == 0.5
 
 
 class TestDegreeDays:

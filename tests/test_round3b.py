@@ -322,36 +322,7 @@ def test_knn_classify_majority(spark):
     assert out == {(0, 0): 4, (1, 1): 4}
 
 
-# ------------------------------------------------------- gradient / decompose
-
-
-def test_field_gradient_linear_ramp(spark):
-    from gridmet_etl_spark.operators.bbox import field_gradient
-
-    # v = 2*j + 3*i: dx = 2, dy = 3 everywhere in the interior
-    rows = [
-        ("v", 0, i, j, float(2 * j + 3 * i))
-        for i in range(4)
-        for j in range(4)
-    ]
-    df = spark.createDataFrame(rows, "var string, t int, i int, j int, value double")
-    out = field_gradient(df, keys=("var", "t")).collect()
-    assert len(out) == 4  # 2x2 interior of a 4x4 grid
-    for r in out:
-        assert r["dx"] == 2.0 and r["dy"] == 3.0
-        assert r["grad_mag"] == pytest.approx((4 + 9) ** 0.5, abs=1e-6)
-
-
-def test_field_gradient_single_shuffle(spark):
-    from gridmet_etl_spark.operators.bbox import field_gradient
-
-    df = spark.createDataFrame(
-        [("v", 0, i, j, 1.0) for i in range(3) for j in range(3)],
-        "var string, t int, i int, j int, value double",
-    )
-    plan = field_gradient(df, keys=("var", "t"))._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") <= 2  # final+initial plan print
-    assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
+# ------------------------------------------------------------------ decompose
 
 
 def test_seasonal_decompose_reconstructs(spark):

@@ -165,50 +165,6 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# hex binning
-# ---------------------------------------------------------------------------
-
-
-def test_hex_bin_origin_and_neighbors(spark):
-    from gridmet_etl_spark.operators.bbox import hex_bin
-
-    pts = spark.createDataFrame(
-        [
-            (1, 0.0, 0.0),      # hex (0,0) center
-            (2, 0.01, 0.01),    # still hex (0,0)
-            (3, 0.0, 1.5),      # r-direction neighbor ~ (q=-1, r=1) region
-            (4, 1.74, 0.0),     # q-direction neighbor (sqrt(3)*size, 0) -> (1,0)
-        ],
-        "pid long, lon double, lat double",
-    )
-    out = {r["pid"]: (r["hq"], r["hr"]) for r in hex_bin(pts, size=1.0).collect()}
-    assert out[1] == (0, 0)
-    assert out[2] == (0, 0)
-    assert out[3] != (0, 0)
-    assert out[4] == (1, 0)
-
-
-def test_hex_bin_partitions_plane(spark):
-    """Every point gets exactly one hex; nearby points share hexes (the
-    fixture grid at size=0.08 collapses 1600 cells into far fewer bins)."""
-    from pyspark.sql import functions as F
-
-    from gridmet_etl_spark.operators.bbox import hex_bin
-
-    cells = (
-        spark.read.parquet("/root/repo/fixtures/grid.parquet")
-        .where(F.col("var") == "tmmx")
-        .select("lon", "lat")
-        .distinct()
-    )
-    b = hex_bin(cells, size=0.08)
-    n_cells = cells.count()
-    assert b.count() == n_cells
-    n_hex = b.select("hq", "hr").distinct().count()
-    assert 10 < n_hex < n_cells / 3
-
-
-# ---------------------------------------------------------------------------
 # quantile normalization
 # ---------------------------------------------------------------------------
 

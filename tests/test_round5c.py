@@ -610,51 +610,6 @@ def test_qini_null_model_tracks_diagonal(spark):
 
 
 # ---------------------------------------------------------------------------
-# Curve-clustered write: FILE-level pruning, not simulated zones
-# ---------------------------------------------------------------------------
-
-
-def test_write_curve_clustered_prunes_files(spark, tmp_path):
-    """Hilbert-clustered parquet: per-FILE (i, j) min/max footers overlap
-    a bbox in strictly fewer files than a hash-scattered write of the
-    same rows — the zone-map simulation made physical."""
-    from pyspark.sql import functions as F
-
-    from gridmet_etl_spark.sources.writers import write_curve_clustered
-
-    cells = spark.createDataFrame(
-        [(i, j, float(i * j)) for i in range(40) for j in range(40)],
-        ["i", "j", "v"],
-    )
-    clustered = str(tmp_path / "clustered")
-    scattered = str(tmp_path / "scattered")
-    write_curve_clustered(cells, clustered, bits=6, n_files=8)
-    cells.repartition(8).write.parquet(scattered)
-
-    def files_hit(path):
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(F.min("i").alias("ilo"), F.max("i").alias("ihi"),
-                 F.min("j").alias("jlo"), F.max("j").alias("jhi"))
-        )
-        hit = per_file.filter(
-            (F.col("ihi") >= 10) & (F.col("ilo") <= 17)
-            & (F.col("jhi") >= 10) & (F.col("jlo") <= 17)
-        )
-        return per_file.count(), hit.count()
-
-    n_c, hit_c = files_hit(clustered)
-    n_s, hit_s = files_hit(scattered)
-    assert n_c == 8 and n_s == 8
-    assert hit_s == 8          # hash scatter: every file overlaps the box
-    assert hit_c < 8           # curve clustering: footers actually prune
-    # row totals survive the clustered write
-    assert spark.read.parquet(clustered).count() == 1600
-    assert "_ck" in spark.read.parquet(clustered).columns
-
-
-# ---------------------------------------------------------------------------
 # Polygon shoelace metrics
 # ---------------------------------------------------------------------------
 
