@@ -5,16 +5,36 @@ Reference: CFSv2 method 1 takes the exact median across the 48-member
 processes all members (etl.py:361-383, a sequential loop we replace by
 keeping ``ens`` in the aggregation keys — see weighted_agg).
 
-Spark design: ``median`` (exact, Spark ≥3.4) in a groupBy over the cell
-keys. Group size is fixed at 48 → bounded state per group, partial_merge
-friendly. At 100 TB the shuffle key (var, time, i, j) is high-cardinality
-and uniform → no skew.
+Spark design: one groupBy over the cell keys collects each cell's members
+into a list (``collect_list``), so the single exchange carries at most 48
+doubles per cell and the state per group is bounded by the ensemble size.
+The median is then row-local: ``sort_array`` the list and pick or average
+its middle element(s) exactly as Spark's ``percentile(…, 0.5)`` does. That
+replaces ``F.median``, whose interpreted ``Percentile`` aggregate keeps a
+boxed-key hash map per cell and has an expensive final merge. At 100 TB
+the shuffle key (var, time, i, j) is high-cardinality and uniform → no
+skew.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _sorted_median(vals: Column) -> Column:
+    """Median of an ascending, NULL-free double array; NULL when empty.
+
+    Same arithmetic as Spark's ``Percentile.getPercentile`` at 0.5: one
+    middle, or two equal middles, is returned as it is; otherwise
+    ``0.5*a + 0.5*b``. Averaging equal middles would not be exact: two
+    5e-324 middles give 0.0. ``F.get`` is 0-based and NULL out of range
+    (``element_at(…, 0)`` raises, even as ``try_element_at``).
+    """
+    n = F.size(vals)
+    lo_i, hi_i = F.shiftright(n - 1, 1), F.shiftright(n, 1)
+    a, b = F.get(vals, lo_i), F.get(vals, hi_i)
+    return F.when((lo_i == hi_i) | (a == b), a).otherwise(a * 0.5 + b * 0.5)
 
 
 def ensemble_median(grid_ens: DataFrame) -> DataFrame:
@@ -22,16 +42,18 @@ def ensemble_median(grid_ens: DataFrame) -> DataFrame:
 
     Keeps lat/lon via first() (functionally dependent on i/j).
     Reproduces `ds[key].median(dim="ens")` (etl.py:296-297), whose default
-    skipna=True (float dtypes) skips NaN members. SQL median skips NULL but
-    sorts NaN above every number, so NaN is nulled first: ingest maps
+    skipna=True (float dtypes) skips NaN members. ``collect_list`` skips
+    NULL but ``sort_array`` sorts NaN above every number, so NaN is nulled
+    first: ingest maps
     NaN→NULL only by convention (as ``weighted_agg._is_missing`` notes),
-    and an all-NaN cell's median is NULL.
+    and an all-NaN cell's median is NULL. Bit-identical to
+    ``F.median(F.when(~F.isnan(value), value))``.
     """
     v = F.col("value")
     return grid_ens.groupBy("var", "time", "i", "j").agg(
         F.first("lat").alias("lat"),
         F.first("lon").alias("lon"),
-        F.median(F.when(~F.isnan(v), v)).alias("value"),
+        _sorted_median(F.sort_array(F.collect_list(F.when(~F.isnan(v), v)))).alias("value"),
     )
 
 

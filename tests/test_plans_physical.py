@@ -92,10 +92,11 @@ def test_median_pipeline_prunes_median_input_by_weights(
 
     plan = _plan(cfsv2_median_pipeline(grid_ens, weights_ens, elevation, features))
     assert re.search(r"BroadcastHashJoin \[i#\d+, j#\d+\], \[i#\d+, j#\d+\], LeftSemi", plan), plan
-    median_input = plan[plan.index("partial_percentile"):]
+    median_input = plan[plan.index("partial_collect_list"):]
     assert "LeftSemi" in median_input, plan
     n_exchanges = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n_exchanges == 2, plan
+    assert "percentile" not in plan, plan  # the sort-based median, not Percentile
 
 
 def test_whole_stage_codegen_covers_physics(spark, grid_ens, weights_ens, elevation):
