@@ -122,7 +122,9 @@ def main(argv: list[str] | None = None) -> int:
         pipeline output, with the mapping CSV persisted beside it (K3,
         helper.py:75-77). Only the fill reads features."""
         # reference dispatch (etl.py:549-568): GIS formats convert at ingest
-        features = read_features(spark, convert_features(args.features, fid_col=fid), fid)
+        # into a parquet whose id column is feature_id; parquet passes through
+        path = convert_features(args.features, fid_col=fid)
+        features = read_features(spark, path, fid if path == args.features else "feature_id")
         out, fmap = fill_missing(out, features)
         write_fill_map_csv(fmap, args.out)
         return out

@@ -249,12 +249,14 @@ def make_elevation() -> pd.DataFrame:
 
 
 def write_prms_param_file(path: str, elev: pd.DataFrame) -> None:
-    """Raw PRMS text form for the parser test (helper.py:154-161 format)."""
+    """Raw PRMS text form (helper.py:154-161 format). Values are written at
+    round-trip precision, so parsing the file gives the elevation parquet's
+    table exactly."""
     with open(path, "w") as f:
         f.write("Description\n####\n")
         f.write("hru_elev\n1\nnhru\n%d\n2\n" % len(elev))
         for v in elev["hru_elev"]:
-            f.write(f"{v:.6f}\n")
+            f.write(f"{v!r}\n")
         f.write("####\n")
         f.write("other_param\n1\nnhru\n2\n1\n0\n0\n####\n")
 
@@ -290,30 +292,6 @@ DOC_VOCAB = [
     "data", "spark", "query", "table", "join", "scan", "merge", "agg",
     "row", "key", "value", "batch", "stream", "window", "sort", "hash",
 ]
-DOC_LANGS = ["en", "es", "de"]
-
-
-def make_documents(n: int = 120) -> pd.DataFrame:
-    """Deterministic word-salad documents (seed-42) for the JSONL source
-    surface: same column shape as the driver's documents table (doc_id,
-    text, lang, source, n_chars) so format-conversion queries are
-    apples-to-apples."""
-    rng = np.random.default_rng(SEED)
-    rows = []
-    for i in range(n):
-        n_tok = int(rng.integers(10, 60))
-        text = " ".join(rng.choice(DOC_VOCAB, n_tok))
-        rows.append(
-            {
-                "doc_id": i,
-                "text": text,
-                "lang": DOC_LANGS[i % len(DOC_LANGS)],
-                "source": f"src{i % 4}",
-                "n_chars": len(text),
-            }
-        )
-    return pd.DataFrame(rows)
-
 
 WEB_SENTENCE_VOCAB = DOC_VOCAB + ["the", "and", "with", "that", "of", "to"]
 WEB_NAV_WORDS = ["home", "about", "contact", "login", "search"]
@@ -384,10 +362,6 @@ def generate(outdir: str) -> None:
     tables["catalog"].to_json(
         os.path.join(outdir, "catalog.json"), orient="records", indent=2
     )
-    # JSONL documents (newline-delimited) for the text-source surface
-    docs = make_documents()
-    docs.to_json(os.path.join(outdir, "documents.jsonl"), orient="records", lines=True)
-    print(f"documents: {len(docs)} rows -> {outdir}/documents.jsonl")
     write_prms_param_file(os.path.join(outdir, "myparam.param"), elev)
 
 

@@ -67,25 +67,3 @@ def relative_humidity(
     p = pressure_at_elevation(elev_m, t_avg)
     e = _c(sph) * p / F.lit(0.622)
     return e / saturation_vapor_pressure(t_avg) * F.lit(100.0)
-
-
-def heat_index_f(t_k: Column | str, rh_pct: Column | str) -> Column:
-    """Extension (no reference counterpart): NOAA Rothfusz heat-index
-    regression in °F from Kelvin temperature and relative humidity (%).
-    Valid for T ≥ 80 °F — callers gate on that (the regression diverges
-    below). Pure column arithmetic (codegen, zero UDF); the polynomial is
-    written in one fixed evaluation order so DuckDB oracles reproduce it
-    bit-for-bit."""
-    t = (_c(t_k) - F.lit(273.15)) * F.lit(9.0 / 5.0) + F.lit(32.0)
-    r = _c(rh_pct)
-    return (
-        F.lit(-42.379)
-        + F.lit(2.04901523) * t
-        + F.lit(10.14333127) * r
-        - F.lit(0.22475541) * t * r
-        - F.lit(6.83783e-3) * t * t
-        - F.lit(5.481717e-2) * r * r
-        + F.lit(1.22874e-3) * t * t * r
-        + F.lit(8.5282e-4) * t * r * r
-        - F.lit(1.99e-6) * t * t * r * r
-    )

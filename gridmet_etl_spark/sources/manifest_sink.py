@@ -7,8 +7,8 @@ two-phase commit, batch and streaming:
     stream.writeStream.format("manifest_jsonl")\
       .option("path", out_dir).option("checkpointLocation", ckpt).start()
 
-The commit protocol (what `export_jsonl`'s plain distributed write cannot
-give you):
+The commit protocol (what a plain distributed ``df.write.json`` cannot give
+you):
 
 - **Tasks stage, the driver publishes.** Each task writes
   ``_staging/<uuid>.jsonl`` and returns a commit message (file, rows,

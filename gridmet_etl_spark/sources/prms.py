@@ -34,10 +34,11 @@ def read_elevation_values(path: str, section: str = "hru_elev") -> list[float]:
 def elevation_dataframe(
     spark: SparkSession, path: str, feature_ids: list[int] | None = None
 ) -> DataFrame:
-    """S7 → DataFrame with positional feature_idx; feature_id attached when
-    the caller provides the feature axis ordering (J5)."""
+    """S7 → DataFrame with positional feature_idx and the feature_id the
+    pipelines join on (J5): the caller's feature axis ordering when given,
+    else the 1-based PRMS HRU number, feature_idx + 1."""
     vals = read_elevation_values(path)
-    fids = feature_ids if feature_ids is not None else list(range(len(vals)))
+    fids = feature_ids if feature_ids is not None else list(range(1, len(vals) + 1))
     if len(fids) != len(vals):
         raise ValueError(f"{len(vals)} elevations but {len(fids)} feature ids")
     rows = [(idx, int(fid), float(v)) for idx, (fid, v) in enumerate(zip(fids, vals))]

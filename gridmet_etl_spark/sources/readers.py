@@ -4,11 +4,11 @@ Canonical storage is Parquet; the reference's GeoParquet/shapefile/NetCDF/
 OPeNDAP inputs all cross an ingest boundary into the long-form tables of
 schemas.py. The readers cast their input into those fixed schemas (the
 reference's fixed schemas §1.3), so downstream plans see stable column
-types and column pruning / predicate pushdown still reach the scan. Only
-``read_documents_jsonl`` declares its schema up front. The parquet readers
-(``read_grid``, ``read_weights_parquet``, ``read_features``, ...) let Spark
-infer the schema from the file footers, which costs one small Spark job
-per call, and then cast; ``read_weights_csv`` reads strings and casts.
+types and column pruning / predicate pushdown still reach the scan. The
+parquet readers (``read_grid``, ``read_weights_parquet``, ``read_features``,
+...) let Spark infer the schema from the file footers, which costs one small
+Spark job per call, and then cast; ``read_weights_csv`` reads strings and
+casts.
 """
 
 from __future__ import annotations
@@ -181,22 +181,6 @@ def read_catalog(spark: SparkSession, path: str) -> DataFrame:
     ]
     extra = [c for c in df.columns if c not in {f.name for f in CATALOG_SCHEMA.fields}]
     return df.select(*cols, *extra)
-
-
-DOCUMENTS_SCHEMA = (
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-)
-
-
-def read_documents_jsonl(
-    spark: SparkSession, path: str, schema: str = DOCUMENTS_SCHEMA
-) -> DataFrame:
-    """Newline-delimited JSON documents source. The schema is EXPLICIT:
-    schema inference on JSON costs a full extra pass over the data (fatal
-    at 100 TB) and can silently widen types between runs; a declared
-    schema makes the read a single streaming pass with column pruning
-    pushed into the parser."""
-    return spark.read.schema(schema).json(path)
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:

@@ -82,87 +82,6 @@ def write_output(
     return path
 
 
-def export_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str = "gzip",
-) -> str:
-    """Newline-delimited JSON sink (the interchange format most corpus
-    tooling consumes). Distributed write — one .json(.gz) part per
-    partition; callers control file count/size via their partitioning.
-    Compressed by default: JSONL is ~5-10× parquet's footprint raw, and
-    gzip parts stay splittable at the FILE level (one task per part)."""
-    df.write.mode(mode).option("compression", compression).json(path)
-    return path
-
-
-def write_sized(
-    df: DataFrame,
-    path: str,
-    target_mb: int = 128,
-    sort_cols: tuple[str, ...] = (),
-    mode: str = "overwrite",
-    compression: str = "zstd",
-) -> str:
-    """Output-file sizing: write parquet in ~``target_mb`` files regardless
-    of the upstream partitioning. The operational problem at 100 TB is
-    twofold — a wide shuffle leaves thousands of KB-sized parts (metadata
-    pressure, open-file storms on every later scan), while a coalesced
-    write leaves 10 GB parts (no scan parallelism, no task retry
-    granularity).
-
-    Mechanism: without ``sort_cols``, the AQE ``rebalance`` hint re-splits
-    the final stage to ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
-    (set per-write below, restored after), which both merges small outputs
-    AND splits skewed ones — strictly better than a fixed
-    ``repartition(n)``, which needs the size known up front and cannot
-    split a skewed partition. With ``sort_cols`` the write goes through
-    ``repartitionByRange`` + ``sortWithinPartitions`` instead (AQE still
-    coalesces the range exchange to the advisory size): files become
-    DISJOINT key ranges, so readers get parquet min/max pruning — a hash
-    rebalance would scatter every key range across every file."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(target_mb * 1024 * 1024))
-    try:
-        if sort_cols:
-            out = df.repartitionByRange(*sort_cols).sortWithinPartitions(*sort_cols)
-        else:
-            out = df.hint("rebalance")
-        out.write.mode(mode).option("compression", compression).parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return path
-
-
-def compact_dataset(
-    spark,
-    path: str,
-    target_mb: int = 128,
-    sort_cols: tuple[str, ...] = (),
-) -> str:
-    """Small-file compaction job: rewrite an existing parquet dataset at
-    ~``target_mb`` files (read → rebalance → overwrite via a temp dir +
-    atomic-ish rename, so a failed compaction never destroys the source).
-    The maintenance operator every long-lived ingest tree needs once
-    incremental appends (T2) have fragmented it."""
-    import shutil
-
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compacting"
-    write_sized(df, tmp, target_mb=target_mb, sort_cols=sort_cols)
-    old = path.rstrip("/") + "._old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return path
-
-
 def write_fill_map_csv(fill_map: DataFrame, out_dir: str, name: str = "fill_map") -> str:
     """K3: persist the nearest-neighbor mapping as a single CSV (small —
     driver-side is correct here, mirroring helper.py:75-77)."""

@@ -905,33 +905,6 @@ GROUP BY c_count
 """
 
 
-def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSONL documents source (schema-on-read, no inference pass): per-lang
-    doc counts, token totals, and digest envelope over the fixture corpus.
-    The write half (export_jsonl) is roundtrip-tested in pytest."""
-    from gridmet_etl_spark.sources.readers import read_documents_jsonl
-
-    docs = read_documents_jsonl(spark, os.path.join(FIXDIR, "documents.jsonl"))
-    return docs.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.size(F.split(F.col("text"), " "))).alias("n_tokens"),
-        F.min(F.md5(F.col("text"))).alias("min_digest"),
-        F.max(F.md5(F.col("text"))).alias("max_digest"),
-    )
-
-
-SQL_JSONL_SCAN = f"""
-SELECT lang, count(*) AS n_docs,
-       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
-       min(md5(text)) AS min_digest, max(md5(text)) AS max_digest
-FROM read_json('{os.path.join(FIXDIR, "documents.jsonl")}',
-               format='newline_delimited',
-               columns={{'doc_id': 'BIGINT', 'text': 'VARCHAR', 'lang': 'VARCHAR',
-                         'source': 'VARCHAR', 'n_chars': 'BIGINT'}})
-GROUP BY lang
-"""
-
-
 def q_climatology_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gridmet_etl_spark.operators.timeseries import climatology_anomaly
 
@@ -1074,7 +1047,6 @@ CONTRACT_QUERIES = {
     "zscore_grid": (q_zscore_grid, SQL_ZSCORE_GRID),
     "winsorize_grid": (q_winsorize_grid, SQL_WINSORIZE_GRID),
     "gap_fill": (q_gap_fill, SQL_GAP_FILL),
-    "jsonl_scan": (q_jsonl_scan, SQL_JSONL_SCAN),
     "tpch_weighted_mean": (q_tpch_weighted_mean, SQL_TPCH_WEIGHTED_MEAN),
     "tpch_q1": (q_tpch_q1, SQL_TPCH_Q1),
     "tpch_semi_anti": (q_tpch_semi_anti, SQL_TPCH_SEMI_ANTI),

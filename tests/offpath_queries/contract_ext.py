@@ -1640,74 +1640,6 @@ WHERE NOT EXISTS (SELECT 1 FROM u WHERE u.o_orderkey = o.o_orderkey)
 """
 
 
-RAG_QUERIES = ["spark hash join", "window aggregation query", "table scan merge"]
-
-
-def q_rag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gridmet_etl_spark.plans.rag import rag_retrieve
-
-    return rag_retrieve(spark, _docs_par(spark, sf_dir), RAG_QUERIES, k=5)
-
-
-def _sql_rag_pipeline() -> str:
-    from gridmet_etl_spark.operators.embed import EMBED_DIMS, _MOD
-    from gridmet_etl_spark.plans.rag import RAG_STRIDE, RAG_WINDOW
-
-    half = (_MOD - 1) // 2
-    dims = range(EMBED_DIMS)
-
-    def comps(tok: str) -> str:
-        # one md5 per token, dim d reads hex window [4d, 4d+4) — the exact
-        # twin of embed._tok_component's single-digest slicing
-        return ",\n         ".join(
-            f"SUM(CAST('0x' || substr(md5({tok}), {4 * d + 1}, 4) AS BIGINT)"
-            f" % {_MOD} - {half}) AS e{d}"
-            for d in dims
-        )
-
-    nrm2 = " + ".join(f"e{d} * e{d}" for d in dims)
-    dot = " + ".join(f"i.e{d} * q.e{d}" for d in dims)
-    qvals = ", ".join(f"({i}, '{t}')" for i, t in enumerate(RAG_QUERIES))
-    return f"""
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-chunks AS (
-  SELECT doc_id, CAST(start // {RAG_STRIDE} AS BIGINT) AS chunk_id,
-         t[start + 1 : start + {RAG_WINDOW}] AS ctoks
-  FROM toks, unnest(generate_series(0, len(t) - 1, {RAG_STRIDE})) AS g(start)),
-ctok AS (
-  SELECT doc_id, chunk_id, u.tok
-  FROM chunks, unnest(ctoks) AS u(tok) WHERE u.tok <> ''),
-emb AS (
-  SELECT doc_id, chunk_id,
-         {comps("tok")}
-  FROM ctok GROUP BY 1, 2),
-idx AS (SELECT *, {nrm2} AS nrm2 FROM emb),
-qraw AS (SELECT * FROM (VALUES {qvals}) AS v(query_id, qtext)),
-qtok AS (
-  SELECT query_id, u.tok
-  FROM (SELECT query_id, string_split(qtext, ' ') AS qt FROM qraw),
-       unnest(qt) AS u(tok) WHERE u.tok <> ''),
-qemb AS (
-  SELECT query_id,
-         {comps("tok")}
-  FROM qtok GROUP BY 1),
-qn AS (SELECT *, {nrm2} AS nrm2 FROM qemb),
-scored AS (
-  SELECT q.query_id, i.doc_id, i.chunk_id,
-         ROUND(({dot}) / sqrt(CAST(i.nrm2 AS DOUBLE) * q.nrm2), {R}) AS score
-  FROM idx i CROSS JOIN qn q
-  WHERE i.nrm2 > 0 AND q.nrm2 > 0),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-            ORDER BY score DESC, doc_id, chunk_id) AS rank
-  FROM scored)
-SELECT r.query_id, CAST(r.rank AS INTEGER) AS rank, r.doc_id, r.chunk_id,
-       r.score, array_to_string(c.ctoks, ' ') AS chunk_text
-FROM ranked r JOIN chunks c USING (doc_id, chunk_id)
-WHERE r.rank <= 5
-"""
-
-
 # ---------------------------------------------------------------------------
 # round 3: event-sequence analytics, graph, similarity joins, robust stats
 
@@ -3050,7 +2982,6 @@ EXT_QUERIES = {
     "char_entropy": (q_char_entropy, SQL_CHAR_ENTROPY),
     "snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF),
     "inverted_index": (q_inverted_index, SQL_INVERTED_INDEX),
-    "rag_pipeline": (q_rag_pipeline, _sql_rag_pipeline()),
     "histogram_docs": (q_histogram_docs, _sql_histogram_docs()),
     "profile_lineitem": (q_profile_lineitem, _sql_profile_lineitem()),
     "upsert_orders": (q_upsert_orders, SQL_UPSERT_ORDERS),

@@ -235,7 +235,7 @@ _RRF_K = 20
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid search: BM25 top-50 (documents, the standing query-term set)
     fused with exact-cosine top-50 (embeddings, query = vec 0; vec_id ≙
-    doc_id as in rag_pipeline) by reciprocal-rank fusion. Scores are
+    doc_id) by reciprocal-rank fusion. Scores are
     scaled-INTEGER reciprocals (scale DIV (c+rank)) so the fused ranking
     is bit-exact in any engine. Fusion cost is bounded by the candidate
     lists (≤ 100 rows) — the corpus is touched only by the two retrievers."""

@@ -519,13 +519,11 @@ SELECT node, CAST(min(hops) AS INT) AS hops FROM reach GROUP BY node
 
 
 # ---------------------------------------------------------------------------
-# Climate batch: heat-wave runs, SPI, frost dates, heat index
+# Climate batch: heat-wave runs, SPI, frost dates
 # ---------------------------------------------------------------------------
 
 _HW_THRESH = 285.0  # K; fixture tmmx mean ≈ 284
 _FROST_K = 273.15
-_HI_GATE_F = 70.0  # Rothfusz validity is ≥80 °F; fixture tmmx tops out ~78 °F,
-# so the contract query gates at 70 to exercise the expression (documented)
 
 
 def _fx_grid(spark: SparkSession) -> DataFrame:
@@ -611,50 +609,6 @@ SELECT i, j, min(time) AS first_frost, max(time) AS last_frost,
        count(*) AS n_frost_days, ROUND(min(value), {R}) AS coldest_k
 FROM '{FX["grid"]}' WHERE var = 'tmmn' AND value < {_FROST_K}
 GROUP BY i, j
-"""
-
-
-def q_heat_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOAA Rothfusz heat index from tmmx + rmax (functions/physics.py
-    ``heat_index_f``): pivot the two vars onto one row via conditional
-    aggregation (no self-join), then the pure-codegen polynomial."""
-    from gridmet_etl_spark.functions.physics import heat_index_f
-
-    g = _fx_grid(spark).where(F.col("var").isin("tmmx", "rmax"))
-    wide = g.groupBy("i", "j", "time").agg(
-        F.max(F.when(F.col("var") == "tmmx", F.col("value"))).alias("t_k"),
-        F.max(F.when(F.col("var") == "rmax", F.col("value"))).alias("rh"),
-    )
-    t_f = (F.col("t_k") - 273.15) * (9.0 / 5.0) + 32.0
-    return (
-        wide.where(t_f >= _HI_GATE_F)
-        .select(
-            "i",
-            "j",
-            F.col("time").alias("day"),
-            F.round(t_f, R).alias("t_f"),
-            F.round(heat_index_f("t_k", "rh"), R).alias("hi_f"),
-        )
-    )
-
-
-def _sql_heat_index() -> str:
-    from .contract import FX
-
-    return f"""
-WITH wide AS (
-  SELECT i, j, time,
-         max(CASE WHEN var = 'tmmx' THEN value END) AS t_k,
-         max(CASE WHEN var = 'rmax' THEN value END) AS rh
-  FROM '{FX["grid"]}' WHERE var IN ('tmmx', 'rmax')
-  GROUP BY i, j, time),
-f AS (SELECT i, j, time, (t_k - 273.15) * (9.0/5.0) + 32.0 AS t, rh FROM wide)
-SELECT i, j, time AS day, ROUND(t, {R}) AS t_f,
-       ROUND(-42.379 + 2.04901523*t + 10.14333127*rh
-             - 0.22475541*t*rh - 6.83783e-3*t*t - 5.481717e-2*rh*rh
-             + 1.22874e-3*t*t*rh + 8.5282e-4*t*rh*rh
-             - 1.99e-6*t*t*rh*rh, {R}) AS hi_f
-FROM f WHERE t >= {_HI_GATE_F}
 """
 
 
@@ -1152,7 +1106,6 @@ EXT2_QUERIES = {
     "heatwave_runs": (q_heatwave_runs, _sql_heatwave_runs()),
     "spi_index": (q_spi_index, _sql_spi_index()),
     "frost_dates": (q_frost_dates, _sql_frost_dates()),
-    "heat_index": (q_heat_index, _sql_heat_index()),
     "tpch_q15ish": (q_tpch_q15ish, SQL_TPCH_Q15ISH),
     "tpch_q17ish": (q_tpch_q17ish, SQL_TPCH_Q17ISH),
     "tpch_q21ish": (q_tpch_q21ish, SQL_TPCH_Q21ISH),

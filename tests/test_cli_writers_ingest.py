@@ -122,6 +122,42 @@ def test_cli_gridmet_fill_missing_writes_fill_map(spark, fixdir, tmp_path):
     assert fmap["donor_id"].notna().all()
 
 
+def test_cli_gridmet_fill_reads_converted_features_by_feature_id(spark, fixdir, tmp_path):
+    """--fid names the id property of a GIS --features file. The converted
+    parquet stores it as feature_id, so the fill must read it by that name:
+    feature 46 (no weights) gets feature 1 as its donor."""
+
+    def square(x: float) -> dict:
+        ring = [[x, 40.0], [x + 1, 40.0], [x + 1, 41.0], [x, 41.0], [x, 40.0]]
+        return {"type": "Polygon", "coordinates": [ring]}
+
+    geojson = tmp_path / "hrus.geojson"
+    geojson.write_text(json.dumps({
+        "type": "FeatureCollection",
+        "features": [
+            {"type": "Feature", "properties": {"hru_id": fid}, "geometry": square(x)}
+            for fid, x in ((1, -110.0), (46, -108.0))
+        ],
+    }))
+    out_dir = tmp_path / "out"
+    rc = main(
+        [
+            "gridmet-etl",
+            "--grid", os.path.join(fixdir, "grid.parquet"),
+            "--weights", os.path.join(fixdir, "weights.parquet"),
+            "--features", str(geojson),
+            "--fid", "hru_id",
+            "--start-date", "1980-01-01",
+            "--end-date", "1980-01-07",
+            "--fill-missing",
+            "--out", str(out_dir),
+        ]
+    )
+    assert rc == 0
+    fmap = pd.read_csv(out_dir / "fill_map.csv")
+    assert fmap[["missing_id", "donor_id"]].values.tolist() == [[46, 1]]
+
+
 @pytest.mark.parametrize(
     "command, inputs, bound",
     [
@@ -196,6 +232,28 @@ def test_cli_elevation_from_prms(spark, fixdir, tmp_path):
     )
     assert rc == 0
     assert (tmp_path / "converted_median").exists()
+
+
+def test_cli_elevation_prms_matches_parquet(spark, fixdir, tmp_path):
+    """PRMS HRU numbers are 1-based: the .param file and the elevation
+    parquet (feature_id = feature_idx + 1) give row-identical output."""
+    outs = []
+    for name in ("myparam.param", "elevation.parquet"):
+        rc = main(
+            [
+                "cfsv2-etl",
+                "--grid-ens", os.path.join(fixdir, "grid_ens.parquet"),
+                "--weights", os.path.join(fixdir, "weights_ens.parquet"),
+                "--elevation", os.path.join(fixdir, name),
+                "--method", "1",
+                "--out", str(tmp_path / name),
+            ]
+        )
+        assert rc == 0
+        df = spark.read.parquet(str(tmp_path / name / "converted_median")).toPandas()
+        outs.append(df.sort_values(["feature_id", "time"]).reset_index(drop=True))
+    assert len(outs[0]) > 0
+    pd.testing.assert_frame_equal(outs[0], outs[1], check_exact=True)
 
 
 def test_cli_run_date_partition(spark, fixdir, tmp_path):

@@ -213,17 +213,6 @@ def test_rolling_zscore_window_and_standardization(spark):
     assert out[3]["z"] == -1.0 and out[4]["z"] == 0.0 and out[5]["z"] == 1.0
 
 
-def test_heat_index_reference_point(spark):
-    from gridmet_etl_spark.functions.physics import heat_index_f
-
-    # NOAA heat-index chart: T=90F, RH=70% -> HI 105F (chart rounds to
-    # integers; the raw Rothfusz regression lands at ~105.9)
-    t_k = (90.0 - 32.0) * 5.0 / 9.0 + 273.15
-    df = spark.createDataFrame([(t_k, 70.0)], "t double, rh double")
-    hi = df.select(heat_index_f("t", "rh").alias("hi")).collect()[0]["hi"]
-    assert abs(hi - 105.0) < 1.5
-
-
 # ------------------------------------------------------------- overlap/alerts
 
 

@@ -161,44 +161,6 @@ def test_convert_features_dispatch(tmp_path):
         assert back["lat"].tolist() == pytest.approx([0.5, 2.5])
 
 
-def test_jsonl_roundtrip(spark, tmp_path):
-    """export_jsonl → read_documents_jsonl reproduces the fixture corpus
-    exactly (ids, text, metadata)."""
-    import os
-
-    from gridmet_etl_spark.sources.readers import read_documents_jsonl
-    from gridmet_etl_spark.sources.writers import export_jsonl
-
-    src = read_documents_jsonl(
-        spark, os.path.join(os.path.dirname(__file__), "..", "fixtures", "documents.jsonl")
-    )
-    out = str(tmp_path / "docs_jsonl")
-    export_jsonl(src, out)
-    back = read_documents_jsonl(spark, out)
-    assert back.count() == src.count() == 120
-    a = {tuple(r) for r in src.collect()}
-    b = {tuple(r) for r in back.collect()}
-    assert a == b
-
-
-def test_jsonl_reader_no_inference_job(spark):
-    """The declared schema must reach the scan: reading with an explicit
-    schema runs zero Spark jobs at DataFrame-construction time (schema
-    inference would launch one)."""
-    import os
-
-    from gridmet_etl_spark.sources.readers import read_documents_jsonl
-
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    df = read_documents_jsonl(
-        spark, os.path.join(os.path.dirname(__file__), "..", "fixtures", "documents.jsonl")
-    )
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before
-    assert [f.name for f in df.schema.fields] == ["doc_id", "text", "lang", "source", "n_chars"]
-
-
 def test_jsonl_corrupt_record_isolation(spark, tmp_path):
     """Malformed JSONL lines must not poison the read: PERMISSIVE mode
     parses good rows and captures bad lines in _corrupt_record for a
